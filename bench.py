@@ -127,7 +127,6 @@ def cdc_throughput(
     n_conversations: int = 0,
     input_dir: str | None = None,
     merge_mode: str = "cow",
-    prefetch_probes: bool = True,
 ) -> dict:
     """The identical CDC apply job at one parallelism level: apply all
     epochs of a change stream through the full engine (quarantine → LWW →
@@ -193,11 +192,7 @@ def cdc_throughput(
     lake = ParquetLakeTable(spark, root, n_buckets=max(32, cores))
     engine = CdcEngine(lake=lake, merge_mode=merge_mode)
     t0 = time.time()
-    # prefetch_probes=False is the A/B baseline: one inline probe job per
-    # epoch instead of the single up-front grouped probe (fixed-term work)
-    engine.apply_epochs(
-        events, epoch_ids=list(range(n_epochs)), prefetch_probes=prefetch_probes
-    )
+    engine.apply_epochs(events, epoch_ids=list(range(n_epochs)))
     wall = time.time() - t0
     final_rows = lake.read().count()
     # data bytes the merges wrote (write amplification: CoW rewrites touched
@@ -215,7 +210,6 @@ def cdc_throughput(
         "events_per_sec": round(n_events / wall, 1),
         "final_rows": final_rows,
         "merge_mode": merge_mode,
-        "probe_mode": "batched" if prefetch_probes else "serial",
         "bytes_written": bytes_written,
         "epochs": n_epochs,
         "epoch_walls": [
@@ -618,10 +612,6 @@ def main() -> None:
     ap.add_argument("--merge-mode", choices=("cow", "mor"), default="cow",
                     help="lake write strategy for throughput mode "
                          "(cow rewrites touched buckets; mor appends deltas)")
-    ap.add_argument("--serial-probes", action="store_true",
-                    help="throughput mode A/B baseline: one inline probe "
-                         "job per epoch instead of the single up-front "
-                         "grouped probe (measures the batched-probe gain)")
     args = ap.parse_args()
 
     if args.cdc_throughput:
@@ -629,7 +619,6 @@ def main() -> None:
             args.sf_dir, args.cores, n_epochs=args.epochs,
             n_conversations=args.conversations, input_dir=args.input_dir,
             merge_mode=args.merge_mode,
-            prefetch_probes=not args.serial_probes,
         )))
     elif args.scaling:
         print(json.dumps(run_scaling(

@@ -15,7 +15,9 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   equality-delete analogue (the layout Flink CDC writes): an epoch's rows
   are LWW-deduped within the batch and appended as per-bucket *delta* file
   sets without ever reading the target, so bytes written per epoch is
-  O(batch) instead of O(touched buckets). Reads fold base+deltas through
+  O(batch) instead of O(touched buckets). Nor is the batch probed: the
+  touched buckets and their new LSN watermarks come from the written
+  files' directories and parquet footers. Reads fold base+deltas through
   the same LWW expressions the CoW merge uses (``lww_payload_order`` — one
   definition, so staged folds provably agree with single-pass merges), and
   ``compact()`` folds deltas back into one base file per bucket. CoW is
@@ -60,13 +62,21 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
     rates the combine saves less than the extra exchange costs.
 
   A mega-conversation (hot conv_id, many distinct keys) is handled the
-  same way by both: an ADAPTIVE write salt splits each touched bucket
-  across as many tasks/files as its rewrite size warrants (probe row
-  counts + manifest-recorded per-part rows, ROWS_PER_WRITE_TASK per task,
-  capped at MAX_WRITE_SALT) — a hot bucket fans out, a cold bucket stays
-  one right-sized file instead of 8 tiny ones. Both strategies resolve by
-  the identical order struct, so winners — tie-breaks included — are
-  bit-identical (asserted in tests).
+  same way by both: an ADAPTIVE write salt splits each bucket across as
+  many tasks/files as its size warrants (manifest-recorded per-part rows,
+  plus the probe's batch counts in a merge that probes;
+  ROWS_PER_WRITE_TASK per task, capped at MAX_WRITE_SALT) — a hot bucket
+  fans out, a cold bucket stays one right-sized file instead of 8 tiny
+  ones. A copy-on-write merge gives each (touched bucket, salt) its own
+  write task. A merge-on-read delta write runs no probe, so only
+  buckets the manifest already sizes past one task get a salt, and its
+  exchange carries no partition count: AQE coalesces it to the epoch's
+  size, and a (bucket, salt) group never spans two tasks. A cold bucket is
+  therefore one delta file however large the epoch, a hot one at most its
+  salt's worth; a conversation that turns hot within one delta epoch, in
+  a bucket the manifest still sizes at one task, is written by one task.
+  Both strategies resolve by the identical order struct, so winners —
+  tie-breaks included — are bit-identical (asserted in tests).
 
 Single-writer assumption: one runner commits at a time (the driver of the
 streaming query). Concurrent writers would need the optimistic-retry loop
@@ -80,6 +90,7 @@ import os
 import shutil
 import tempfile
 import time
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -573,8 +584,7 @@ class ParquetLakeTable:
                 "seq": prev["seq"],
             }
         seq = prev["seq"] + 1
-        commit_dir = f"data/c{seq:08d}"
-        abs_dir = os.path.join(self.root, commit_dir)
+        commit_dir, abs_dir = self._fresh_commit_dir(seq)
         df = self._read_manifest_buckets(prev, sorted(todo), full).withColumn(
             BUCKET_COL, self._bucket_expr()
         )
@@ -594,14 +604,14 @@ class ParquetLakeTable:
             if self.stats_cols
             else {}
         )
-        crows = self._part_rows(abs_dir)
+        footers = self._part_footers(abs_dir)
         for d in os.listdir(abs_dir):
             if d.startswith(f"{BUCKET_COL}="):
                 b = d.split("=")[1]
                 buckets[b] = {
                     "path": f"{commit_dir}/{d}",
                     "schema": schema_name,
-                    "rows": crows.get(int(b), 0),
+                    "rows": footers[int(b)][0],
                 }
                 if int(b) in cstats:
                     buckets[b]["stats"] = cstats[int(b)]
@@ -676,8 +686,7 @@ class ParquetLakeTable:
         obs = Observation("rebucket")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
         seq = prev["seq"] + 1
-        commit_dir = f"data/c{seq:08d}"
-        abs_dir = os.path.join(self.root, commit_dir)
+        commit_dir, abs_dir = self._fresh_commit_dir(seq)
         salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(WRITE_SALT))
         (
             df.repartition(n_buckets * WRITE_SALT, F.col(BUCKET_COL), salt)
@@ -687,29 +696,22 @@ class ParquetLakeTable:
             .parquet(abs_dir)
         )
         # per-bucket watermarks under the new layout, from the written
-        # rows: tombstones included, ≤ n_buckets rows to the driver
-        wm_rows = (
-            self.spark.read.parquet(abs_dir)
-            .withColumn(BUCKET_COL, new_bucket)
-            .groupBy(BUCKET_COL)
-            .agg(F.max(META_LSN).alias("wm"))
-            .collect()
-        )
-        watermarks = {str(r[0]): int(r[1]) for r in wm_rows}
+        # files' footers (tombstones included) — no pass over the rows
+        footers = self._part_footers(abs_dir)
+        watermarks = {str(b): hi for b, (_n, hi) in footers.items() if hi is not None}
         buckets = {}
         rstats = (
             self._collect_part_stats(abs_dir, self.current_schema())
             if self.stats_cols
             else {}
         )
-        rrows = self._part_rows(abs_dir)
         for d in os.listdir(abs_dir):
             if d.startswith(f"{BUCKET_COL}="):
                 b = d.split("=")[1]
                 buckets[b] = {
                     "path": f"{commit_dir}/{d}",
                     "schema": prev["schema"],
-                    "rows": rrows.get(int(b), 0),
+                    "rows": footers[int(b)][0],
                 }
                 if int(b) in rstats:
                     buckets[b]["stats"] = rstats[int(b)]
@@ -738,8 +740,33 @@ class ParquetLakeTable:
             "rows": n_rows,
         }
 
-    def _publish(self, commit: dict) -> None:
-        """Atomic commit point: tmp write + rename."""
+    def merge_probes(self, mode: str) -> bool:
+        """Whether a ``merge_into`` in ``mode`` probes its batch now: a CoW
+        merge and a first merge into an empty table do; a MoR delta write
+        (``mode="mor"`` on a table with a commit) never does. A delta write
+        only makes sense against an existing table; a first merge
+        degenerates to the (identical) single-pass CoW path."""
+        return mode == "cow" or self.last_commit() is None
+
+    def _fresh_commit_dir(self, seq: int) -> tuple[str, str]:
+        """(relative, absolute) data dir of the unpublished commit ``seq``,
+        emptied first. Anything already there was left by an attempt at the
+        same seq that failed before ``_publish`` (one writer, and a
+        published seq is never written again). A dynamic-overwrite write
+        replaces only the ``_b=`` dirs it produces, so a leftover bucket dir
+        would otherwise be listed — and published — as part of this
+        commit."""
+        commit_dir = f"data/c{seq:08d}"
+        abs_dir = os.path.join(self.root, commit_dir)
+        shutil.rmtree(abs_dir, ignore_errors=True)
+        return commit_dir, abs_dir
+
+    def _publish(self, commit: dict, side_write: Future | None = None) -> None:
+        """Atomic commit point: tmp write + rename. ``side_write``: a
+        concurrent write the commit depends on (the runner's DLQ append);
+        it is awaited first, and its failure leaves the commit unpublished."""
+        if side_write is not None:
+            side_write.result()
         seq = commit["seq"]
         d = os.path.join(self.root, "_commits")
         fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp-")
@@ -865,13 +892,18 @@ class ParquetLakeTable:
 
     def _with_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
         """Add ``_salt`` = pmod(xxhash64(key), per-bucket fan-out). Rows
-        whose bucket is unprobed (null-lsn) get a null salt: they still
-        hash to a stable partition and write into their bucket dir.
+        whose bucket has no fan-out (a delta's unsalted buckets) get a null
+        salt: each such bucket is one group, hashed to a stable partition.
 
         Small maps inline as a literal ``create_map`` lookup (no extra plan
         node); wide epochs (hundreds+ touched buckets) switch to a broadcast
         hash join — the literal-map lookup is a linear scan per row."""
-        if len(salts) <= SALT_MAP_LITERAL_MAX:
+        if not salts:
+            # every salt 0, but still an expression of the key: a literal
+            # would be folded out of the window's partitioning, which the
+            # exchange on (bucket, salt) would then no longer satisfy
+            fanout = F.lit(1)
+        elif len(salts) <= SALT_MAP_LITERAL_MAX:
             fanout = F.element_at(
                 F.create_map(
                     *[F.lit(x) for b, s in sorted(salts.items()) for x in (b, s)]
@@ -889,21 +921,33 @@ class ParquetLakeTable:
         ).drop("_fanout")
 
     @staticmethod
-    def _part_rows(abs_dir: str) -> dict[int, int]:
-        """Per-bucket row counts of one freshly written commit dir, read
-        from the parquet footers — driver-side, no Spark job (the Iceberg
-        manifest row-count analogue). Sizes the NEXT epoch's adaptive write
-        salt; a missing/unreadable footer degrades to 0 (salt sized by the
-        batch alone), never fails the commit."""
+    def _part_footers(abs_dir: str) -> dict[int, tuple[int, int | None]]:
+        """Per-bucket ``(rows, max _lsn)`` of one freshly written commit
+        dir, read from the parquet footers — driver-side, no Spark job
+        (Iceberg fills its manifest metrics from the written files the same
+        way). The row counts size the NEXT epoch's adaptive write salt; the
+        ``_lsn`` maximum (``None`` when the bucket holds no non-null lsn)
+        is the new bucket watermark of a MoR delta write or a rebucket,
+        neither of which runs a probe. A footer that cannot be read fails
+        the commit: the watermarks depend on it."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
 
-        def _n(path: str) -> int:
-            try:
-                return pq.ParquetFile(path).metadata.num_rows
-            except Exception:
-                return 0
+        def _n(path: str) -> tuple[int, int | None]:
+            md = pq.read_metadata(path)
+            hi = None
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                col = next(
+                    rg.column(j)
+                    for j in range(rg.num_columns)
+                    if rg.column(j).path_in_schema == META_LSN
+                )
+                st = col.statistics
+                if st is not None and st.has_min_max:
+                    hi = st.max if hi is None else max(hi, st.max)
+            return md.num_rows, hi
 
         by_bucket: dict[int, list[str]] = {}
         for d in os.listdir(abs_dir):
@@ -919,8 +963,12 @@ class ParquetLakeTable:
         # footer opens release the GIL in pyarrow's C++ IO; a small pool
         # turns a salt-fanned epoch's serial footer walk into one round-trip
         with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as pool:
-            counts = dict(zip(files, pool.map(_n, files)))
-        return {b: sum(counts[p] for p in paths) for b, paths in by_bucket.items()}
+            footers = dict(zip(files, pool.map(_n, files)))
+        out = {}
+        for b, paths in by_bucket.items():
+            maxima = [footers[p][1] for p in paths if footers[p][1] is not None]
+            out[b] = (sum(footers[p][0] for p in paths), max(maxima, default=None))
+        return out
 
     def read_where(
         self, predicates: dict[str, tuple], at_seq: int | None = None
@@ -1176,12 +1224,13 @@ class ParquetLakeTable:
     ) -> dict[int, tuple[int, int]]:
         """The touched-bucket / watermark probe as a standalone action:
         ``{bucket: (max_lsn, n_rows)}`` over a two-column projection of the
-        batch (≤ n_buckets rows to the driver). Exposed so a replay loop
-        can PREFETCH the next epoch's probe on a separate thread while the
-        current epoch's merge job runs — the probe must finish before the
-        merge plan can be built (it sizes the adaptive write salt and picks
-        the target buckets to read), so off the critical path it stops
-        costing a serialized job per epoch (runner.apply_epochs does this).
+        batch (≤ n_buckets rows to the driver). Exposed so a caller can
+        PREFETCH it on a separate thread while another merge job runs
+        (``runner.MultiTableEngine`` does this per table) — the probe must
+        finish before a CoW merge plan can be built (it sizes the adaptive
+        write salt and picks the target buckets to read), so off the
+        critical path it stops costing a serialized job per epoch. A MoR
+        delta merge never needs it.
 
         Null-lsn rows are dropped defensively: a row whose watermark can't
         be computed must never mark a bucket touched nor produce a None
@@ -1236,21 +1285,31 @@ class ParquetLakeTable:
         mode: str = "cow",
         lww: str = "window",
         probe: dict[int, tuple[int, int]] | None = None,
+        side_write: Future | None = None,
     ) -> MergeMetrics:
         """MERGE src (one epoch's change events, may contain intra-batch
         duplicates) into the table under max-LSN LWW. Idempotent per epoch.
+        Rows with a null lsn are dropped (no watermark can cover them; the
+        runner quarantines them before this).
 
         ``probe_src``: optional cheaper stand-in for the touched-bucket /
         watermark probe — must contain the same (bucket-key, lsn) rows as
         ``src`` (e.g. the pre-enrichment batch, so the probe pass does not
         re-run an expensive UDF stage). ``probe``: the probe RESULT itself
         (from ``probe_batch`` over the same rows), when the caller already
-        ran it — e.g. prefetched concurrently with the previous epoch's
-        merge; passing it skips the probe job entirely. CONTRACT: a passed
-        probe must be ``probe_batch`` over the exact post-filter rows of a
-        deterministic source — the merge validates that every bucket it
-        writes was probe-touched and aborts before commit otherwise (a
-        silent miss would drop the untouched bucket's existing rows).
+        ran it — e.g. the replay's grouped ``probe_epochs``; passing it
+        skips the probe job entirely. CONTRACT: a passed probe must be
+        ``probe_batch`` over the exact post-filter rows of a deterministic
+        source — the merge validates that every bucket it writes was
+        probe-touched and aborts before commit otherwise (a silent miss
+        would drop the untouched bucket's existing rows). Only a CoW merge
+        and the first merge into an empty table probe (``merge_probes``); a
+        MoR delta write ignores both arguments.
+
+        ``side_write``: a concurrent write this commit depends on (the
+        runner's DLQ append). It is awaited just before the commit point,
+        so a published commit implies it is durable; if it failed, its
+        exception propagates and the epoch stays uncommitted.
 
         ``mode``:
 
@@ -1263,13 +1322,23 @@ class ParquetLakeTable:
           shape Flink CDC writes): the epoch's rows are LWW-deduped
           *within the batch only* and appended as per-bucket DELTA file
           sets — the target is never read, so bytes written per epoch is
-          O(batch), not O(touched buckets). Readers fold base+deltas with
-          the same LWW expressions (``_read_manifest_buckets``), and
+          O(batch), not O(touched buckets). Nor is the batch probed: the
+          touched buckets are the ``_b=`` directories the write produced,
+          and each one's new watermark is ``max(previous, footer max of
+          _lsn)`` from the footer pass that also records its row count. The
+          write's single exchange partitions on (bucket, salt), salted from
+          the manifest's row counts alone, and AQE coalesces it: a cold
+          touched bucket is one file, a bucket the manifest sizes past
+          ``ROWS_PER_WRITE_TASK`` rows at most its salt's worth (see the
+          module docstring). Readers fold base+deltas with the
+          same LWW expressions (``_read_manifest_buckets``), and
           ``compact()`` folds deltas back into one base file per bucket.
           Because the target is unread, per-epoch updated/inserted/
           deleted/stale conflict counts are unknowable at write time and
           reported as -1 (Iceberg MoR has the same limitation); the
           authoritative counts come from ``table_changes`` or compaction.
+          A first merge into an empty table has nothing to delta against
+          and runs the single-pass CoW path.
 
         Modes may be mixed freely on one table: a CoW merge on a bucket
         carrying deltas reads every part and retires them.
@@ -1290,6 +1359,7 @@ class ParquetLakeTable:
             return MergeMetrics(epoch_id=epoch_id, skipped=True)
 
         prev = self.last_commit()
+        seq = (prev["seq"] + 1) if prev else 1
         data_cols = [c for c in src.columns if c not in (lsn_col, op_col, "epoch_id")]
         incoming = T.StructType([f for f in src.schema.fields if f.name in data_cols])
         current = self.current_schema()
@@ -1302,33 +1372,37 @@ class ParquetLakeTable:
         schema_name = self._write_schema(schema, version) if schema_changed else prev["schema"]
 
         have = {f.name for f in src.schema.fields}
-        src_rows = src.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ],
-            F.col(lsn_col).cast("long").alias(META_LSN),
-            (F.col(op_col) == "D").alias(META_DELETED),
-        ).withColumn(BUCKET_COL, self._bucket_expr())
+        src_rows = (
+            src.select(
+                *[
+                    F.col(f.name).cast(f.dataType).alias(f.name)
+                    if f.name in have
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ],
+                F.col(lsn_col).cast("long").alias(META_LSN),
+                (F.col(op_col) == "D").alias(META_DELETED),
+            )
+            .where(F.col(META_LSN).isNotNull())
+            .withColumn(BUCKET_COL, self._bucket_expr())
+        )
+        mor_delta = not self.merge_probes(mode)
 
-        # Probe job: touched buckets, per-bucket source LSN maxima, and
-        # per-bucket batch row counts (≤ n_buckets rows to the driver). Runs
-        # on a two-column projection of the (pre-enrichment, when provided)
-        # batch — Catalyst prunes the scan to the probe's columns, so this
-        # pass is much cheaper than materializing the full batch, and the
-        # merge job below reads the source through its own (columnar,
-        # cached-by-OS) scan. The counts size the adaptive write salt below.
+        # Probe job (CoW and a first merge only): touched buckets, per-bucket
+        # source LSN maxima, and per-bucket batch row counts (≤ n_buckets
+        # rows to the driver). Runs on a two-column projection of the
+        # (pre-enrichment, when provided) batch — Catalyst prunes the scan
+        # to the probe's columns, so this pass is much cheaper than
+        # materializing the full batch. The buckets pick the target files
+        # to rewrite and the counts size the adaptive write salt below; a
+        # MoR delta write needs neither, so it runs no probe at all.
         t_probe = time.time()
-        if probe is None:
+        if not mor_delta and probe is None:
             probe = self.probe_batch(
                 probe_src if probe_src is not None else src, lsn_col
             )
-        touched = sorted(probe)
         t_probe = time.time() - t_probe
-        if not touched:
-            seq = (prev["seq"] + 1) if prev else 1
+        if not mor_delta and not probe:
             commit = {
                 "seq": seq,
                 "epoch_id": epoch_id,
@@ -1338,7 +1412,7 @@ class ParquetLakeTable:
                 "watermarks": prev.get("watermarks", {}) if prev else {},
                 "metrics": MergeMetrics(epoch_id=epoch_id).as_dict(),
             }
-            self._publish(commit)
+            self._publish(commit, side_write)
             return MergeMetrics(epoch_id=epoch_id)
 
         full = T.StructType(
@@ -1348,13 +1422,10 @@ class ParquetLakeTable:
                 T.StructField(META_DELETED, T.BooleanType()),
             ]
         )
-        # a delta write only makes sense against an existing table; a first
-        # merge degenerates to the (identical) single-pass path below
-        mor_delta = mode == "mor" and prev is not None
         tgt_parts = []
-        if prev and not mor_delta:
+        if not mor_delta and prev:
             by_schema: dict[str, list[str]] = {}
-            for b in touched:
+            for b in sorted(probe):
                 ptr = prev["buckets"].get(str(b))
                 if ptr:
                     # every part: base + any merge-on-read deltas — the LWW
@@ -1390,30 +1461,52 @@ class ParquetLakeTable:
         # full key splits a hot bucket across tasks/files — but a FIXED salt
         # multiplies the file count of every cold bucket too (at 4096
         # buckets × salt 8 that is 32k files per epoch, most of them tiny).
-        # Instead each touched bucket gets its own salt sized from the rows
-        # it will write: the batch's per-bucket counts (probe job, already
-        # paid) plus the target rows the CoW rewrite re-emits (per-part
-        # "rows" recorded in the manifest at write time — the Iceberg
-        # manifest row-count analogue; absent on pre-upgrade manifests ⇒
-        # sized by batch only). Layout stays deterministic (salt counts are
-        # a function of probe + manifest, content-hash partitioning), and
+        # Instead each bucket gets its own salt sized from the rows it will
+        # write, ROWS_PER_WRITE_TASK per task: the target rows recorded per
+        # part in the manifest at write time (the Iceberg manifest
+        # row-count analogue; absent on pre-upgrade manifests ⇒ 0), plus,
+        # for a merge that probes, the batch's per-bucket counts (probe
+        # job, already paid). Layout stays deterministic (salt counts are a
+        # function of probe + manifest, content-hash partitioning), and
         # readers are layout-agnostic (they list the bucket directory).
-        prev_rows = {}
-        if prev and not mor_delta:
-            for b in touched:
-                ptr = prev["buckets"].get(str(b))
-                if ptr:
-                    prev_rows[b] = sum(
-                        int(part.get("rows", 0)) for part in self._ptr_parts(ptr)
-                    )
-        salts = {
-            b: min(
-                MAX_WRITE_SALT,
-                max(1, -(-(n + prev_rows.get(b, 0)) // ROWS_PER_WRITE_TASK)),
-            )
-            for b, (_m, n) in probe.items()
+        def manifest_rows(b) -> int:
+            ptr = prev["buckets"].get(str(b)) if prev else None
+            return sum(int(part.get("rows", 0)) for part in self._ptr_parts(ptr)) if ptr else 0
+
+        def fanout(n: int) -> int:
+            return min(MAX_WRITE_SALT, max(1, -(-n // ROWS_PER_WRITE_TASK)))
+
+        if mor_delta:
+            # No probe, so no touched buckets or batch counts: only buckets
+            # the manifest already sizes past one task get a salt (a hot
+            # conversation's bucket has grown), every other row gets a null
+            # one. No partition count either: AQE coalesces the exchange to
+            # the epoch's size, and a (bucket, salt) group never spans two
+            # tasks — so a cold bucket is ONE file however large the epoch,
+            # a hot bucket at most its salt's worth.
+            salts = {
+                int(b): f for b in prev["buckets"] if (f := fanout(manifest_rows(b))) > 1
+            }
+
+            def lay_out(df: DataFrame) -> DataFrame:
+                return self._with_salt(df, salts).repartition(
+                    F.col(BUCKET_COL), F.col("_salt")
+                )
+        else:
+            salts = {b: fanout(n + manifest_rows(b)) for b, (_m, n) in probe.items()}
+            n_parts = max(1, sum(salts.values()))
+
+            def lay_out(df: DataFrame) -> DataFrame:
+                return self._with_salt(df, salts).repartition(
+                    n_parts, F.col(BUCKET_COL), F.col("_salt")
+                )
+        # conflict flags: which side (batch or target) each key's versions
+        # came from — only a merge that reads the target can classify
+        flags = {} if mor_delta else {
+            "_src_lsn": F.max(F.when(F.col("_src"), F.col(META_LSN))),
+            "_tgt_lsn": F.max(F.when(~F.col("_src"), F.col(META_LSN))),
+            "_tgt_deleted": F.max(F.when(~F.col("_src"), F.col(META_DELETED))),
         }
-        n_parts = max(1, sum(salts.values()))
         if lww == "window":
             # One shuffle, straight into the write layout: hash partitioning
             # on (bucket, salt) clusters every key (both are functions of
@@ -1423,24 +1516,19 @@ class ParquetLakeTable:
             # below inherits the layout unchanged. row_number()==1 over the
             # LWW order descending is argmax(order), i.e. exactly the
             # max_by winner; the flag aggregates ride the same sorted frame.
-            part = self._with_salt(merged, salts).repartition(
-                n_parts, F.col(BUCKET_COL), F.col("_salt")
-            )
             w = Window.partitionBy(BUCKET_COL, "_salt", *self.key_cols).orderBy(
                 F.desc(order)
             )
             wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
             out = (
-                part.select(
+                lay_out(merged).select(
                     *self.key_cols,
                     F.col(BUCKET_COL),
                     *[F.col(c) for c in non_key],
                     F.col(META_LSN),
                     F.col(META_DELETED),
                     F.row_number().over(w).alias("_rn"),
-                    F.max(F.when(F.col("_src"), F.col(META_LSN))).over(wf).alias("_src_lsn"),
-                    F.max(F.when(~F.col("_src"), F.col(META_LSN))).over(wf).alias("_tgt_lsn"),
-                    F.max(F.when(~F.col("_src"), F.col(META_DELETED))).over(wf).alias("_tgt_deleted"),
+                    *[e.over(wf).alias(n) for n, e in flags.items()],
                 )
                 .where(F.col("_rn") == 1)
                 .drop("_rn")
@@ -1448,35 +1536,25 @@ class ParquetLakeTable:
         else:
             # max_by(payload, order) partial+final aggregation: map-side
             # combine folds per-key duplicate storms before the shuffle
-            # (then a second exchange lays the result out for the write).
+            # (then the write lays the result out, below).
             winner = F.max_by(payload, order).alias("_w")
-            flags = [
-                F.max(F.when(F.col("_src"), F.col(META_LSN))).alias("_src_lsn"),
-                F.max(F.when(~F.col("_src"), F.col(META_LSN))).alias("_tgt_lsn"),
-                F.max(F.when(~F.col("_src"), F.col(META_DELETED))).alias("_tgt_deleted"),
-            ]
-            agg = merged.groupBy(*self.key_cols, BUCKET_COL).agg(winner, *flags)
-
+            agg = merged.groupBy(*self.key_cols, BUCKET_COL).agg(
+                winner, *[e.alias(n) for n, e in flags.items()]
+            )
             out = agg.select(
                 *self.key_cols,
                 F.col(BUCKET_COL),
                 *[F.col(f"_w.{c}").alias(c) for c in non_key],
                 F.col(f"_w.{META_LSN}").alias(META_LSN),
                 F.col(f"_w.{META_DELETED}").alias(META_DELETED),
-                F.col("_src_lsn"),
-                F.col("_tgt_lsn"),
-                F.col("_tgt_deleted"),
+                *[F.col(n) for n in flags],
             )
 
         obs = Observation(f"merge-{epoch_id}")
         if mor_delta:
             # target unread → conflict classification impossible at write
             # time; observe only the delta cardinality (metrics report -1)
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_applied"),
-                F.max(F.col(META_LSN)).alias("max_lsn"),
-            )
+            out = out.observe(obs, F.count(F.lit(1)).alias("rows_applied"))
         else:
             src_won = F.col("_src_lsn").isNotNull() & (
                 F.col("_tgt_lsn").isNull() | (F.col("_src_lsn") > F.col("_tgt_lsn"))
@@ -1500,7 +1578,6 @@ class ParquetLakeTable:
                         & (F.col("_src_lsn") < F.col("_tgt_lsn"))
                     ).cast("long")
                 ).alias("stale"),
-                F.max(F.col(META_LSN)).alias("max_lsn"),
             )
         final_cols = (
             [F.col(f.name) for f in schema.fields]
@@ -1508,20 +1585,17 @@ class ParquetLakeTable:
         )
         out = out.select(*final_cols)
 
-        seq = (prev["seq"] + 1) if prev else 1
-        commit_dir = f"data/c{seq:08d}"
-        abs_dir = os.path.join(self.root, commit_dir)
+        commit_dir, abs_dir = self._fresh_commit_dir(seq)
         t_write = time.time()
         writer = out
         if lww == "agg":
             # the agg output is distributed by the grouping hash; lay it out
-            # by (bucket, salt) for the write. (The window strategy already
-            # produced exactly this layout, sorted by key — T3 stable
-            # in-partition order — so it writes as-is with no exchange.)
+            # for the write, sorted on the key (the window strategy already
+            # produced exactly this layout — T3 stable in-partition order —
+            # so it writes as-is with no exchange)
             writer = (
-                self._with_salt(out, salts)
-                .repartition(n_parts, F.col(BUCKET_COL), F.col("_salt"))
-                .sortWithinPartitions(*self.key_cols)
+                lay_out(out)
+                .sortWithinPartitions(BUCKET_COL, *self.key_cols)
                 .drop("_salt")
             )
         (
@@ -1532,44 +1606,47 @@ class ParquetLakeTable:
         t_write = time.time() - t_write
         m = obs.get
 
+        # the buckets this merge wrote, with each one's rows and _lsn
+        # maximum, from the written footers — no pass over the data
+        footers = self._part_footers(abs_dir)
+        present = set(footers)
+        if mor_delta:
+            batch_max = {b: hi for b, (_n, hi) in footers.items()}
+            if not present:
+                # nothing survived the batch's filters: an empty commit
+                shutil.rmtree(abs_dir, ignore_errors=True)
+        else:
+            # Probe-contract guard: every bucket this merge actually wrote
+            # must have been probe-touched. A caller-supplied ``probe`` that
+            # misses a written bucket (stale prefetch, probe over different
+            # rows, a non-deterministic source re-evaluated between probe
+            # and merge) would otherwise silently replace that bucket's
+            # pointer with a batch-only fold — permanently dropping its
+            # existing rows. Abort BEFORE _publish: the orphaned data dir is
+            # retired by expire_snapshots, the table is untouched.
+            unprobed = present - {int(b) for b in probe}
+            if unprobed:
+                raise RuntimeError(
+                    f"merge wrote buckets {sorted(unprobed)} the probe never "
+                    "touched — the probe must come from probe_batch over the "
+                    "exact post-filter rows of a deterministic source "
+                    "(epoch not committed)"
+                )
+            batch_max = {b: src_max for b, (src_max, _n) in probe.items()}
         # per-bucket LSN watermarks for lineage/resume metrics: a touched
-        # bucket's new watermark is max(previous watermark, batch maximum) —
-        # derived from the probe job, no extra pass over the written files
+        # bucket's new watermark is max(previous watermark, batch maximum)
         new_watermarks = dict(prev.get("watermarks", {})) if prev else {}
-        for b, (src_max, _n) in probe.items():
+        for b, hi in batch_max.items():
             cur = new_watermarks.get(str(b))
-            new_watermarks[str(b)] = max(int(src_max), int(cur)) if cur is not None else int(src_max)
+            new_watermarks[str(b)] = max(int(hi), int(cur)) if cur is not None else int(hi)
 
         buckets = dict(prev["buckets"]) if prev else {}
-        present = {
-            int(d.split("=")[1])
-            for d in os.listdir(abs_dir)
-            if d.startswith(f"{BUCKET_COL}=")
-        }
-        # Probe-contract guard: every bucket this merge actually wrote must
-        # have been probe-touched. A caller-supplied ``probe`` that misses a
-        # written bucket (stale prefetch, probe over different rows, a
-        # non-deterministic source re-evaluated between probe and merge)
-        # would otherwise silently replace that bucket's pointer with a
-        # batch-only fold — permanently dropping its existing rows (CoW) or
-        # KeyError-ing on the watermark below. Abort BEFORE _publish: the
-        # orphaned data dir is retired by expire_snapshots, the table is
-        # untouched.
-        unprobed = present - {int(b) for b in probe}
-        if unprobed:
-            raise RuntimeError(
-                f"merge wrote buckets {sorted(unprobed)} the probe never "
-                "touched — the probe must come from probe_batch over the "
-                "exact post-filter rows of a deterministic source "
-                "(epoch not committed)"
-            )
-        part_stats = self._collect_part_stats(abs_dir, schema) if self.stats_cols else {}
-        part_rows = self._part_rows(abs_dir)
+        part_stats = self._collect_part_stats(abs_dir, schema) if self.stats_cols and present else {}
         for b in present:
             part = {
                 "path": f"{commit_dir}/{BUCKET_COL}={b}",
                 "schema": schema_name,
-                "rows": part_rows.get(b, 0),
+                "rows": footers[b][0],
             }
             if b in part_stats:
                 part["stats"] = part_stats[b]
@@ -1609,5 +1686,5 @@ class ParquetLakeTable:
             "watermarks": new_watermarks,
             "metrics": metrics.as_dict(),
         }
-        self._publish(commit)
+        self._publish(commit, side_write)
         return metrics

@@ -3,7 +3,8 @@
 The engine's hot path (SURVEY §4.3):
 
     change events (epoch)
-      → validity split (dead-letter quarantine, never fail the batch)
+      → validity split (dead-letter quarantine, never fail the batch; the
+        DLQ append runs on its own thread beside the merge)
       → optional vectorized enrichment (mapInPandas, Arrow batches)
       → LWW dedupe (partial+final agg — skew-safe)
       → LakeTable.merge_into (bucket copy-on-write, atomic manifest)
@@ -25,11 +26,13 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from nifi_nlp_processor_spark.lake import MergeMetrics, ParquetLakeTable
 from nifi_nlp_processor_spark.operators.quarantine import split_valid
@@ -66,6 +69,8 @@ class CdcEngine:
     # None = manual compaction only.
     auto_compact_deltas: int | None = None
     results: list[EpochResult] = field(default_factory=list)
+    # the one long-lived thread DLQ appends run on, beside the merge
+    _dlq_pool: ThreadPoolExecutor | None = field(default=None, init=False, repr=False)
 
     def apply_epoch(
         self,
@@ -74,31 +79,27 @@ class CdcEngine:
         probe: dict[int, tuple[int, int]] | None = None,
     ) -> EpochResult:
         """Apply one micro-batch. Safe to call twice with the same epoch_id.
-        ``probe``: a prefetched ``lake.probe_batch`` result over this
-        batch's valid rows (see ``_prefetch_probe``) — skips the inline
-        probe job."""
+        ``probe``: a precomputed ``lake.probe_batch`` result over this
+        batch's valid rows (``apply_epochs`` passes the grouped probe's) —
+        skips the inline probe job of a merge that probes (see
+        ``lake.merge_into``).
+
+        Critical path: the DLQ append is submitted to the engine's DLQ
+        thread and runs beside the merge; ``merge_into`` waits for it just
+        before publishing, so a published commit still implies its rejects
+        are durable, and a failed DLQ write leaves the epoch uncommitted.
+        ``EpochResult.quarantined`` is the exact reject count, observed on
+        the DLQ write itself."""
         if epoch_id in self.lake.committed_epochs():
             res = EpochResult(epoch_id=epoch_id, merge=MergeMetrics(epoch_id=epoch_id, skipped=True))
             self.results.append(res)
             return res
 
-        valid, bad = split_valid(batch, list(self.key_cols))
-        # Snapshot-cutover filter: after a bootstrap, every event at or
-        # below the snapshot LSN is already reflected in the loaded state
-        # and MUST be dropped — LWW alone cannot save the one bad case: a
-        # key deleted BEFORE the snapshot has no tombstone in it (the
-        # snapshot is live rows only), so a stale lsn<=W event for that key
-        # would re-insert it. Reading the cutover from persisted table
-        # props means a restarted engine on the same root enforces it too.
-        cutover = self.lake.extra_props.get("bootstrap_lsn")
-        if cutover is not None:
-            valid = valid.where(F.col("lsn") > int(cutover))
-        n_bad = 0
+        valid, bad = self._split(batch)
+        dlq = None
         if self.quarantine_dir is not None:
-            # DLQ append (REL_FAILURE analogue). Counted via the write.
-            bad_out = bad.withColumn("_epoch_id", F.lit(epoch_id))
-            bad_out.write.mode("append").parquet(self.quarantine_dir)
-            n_bad = -1  # count available from the quarantine table if needed
+            # DLQ append (REL_FAILURE analogue) beside the merge
+            dlq = self._submit_dlq(bad.withColumn("_epoch_id", F.lit(epoch_id)))
 
         # Probe the post-quarantine, PRE-enrichment frame: the probe still
         # scans only (bucket-key, lsn) — never text or the UDF stage — but
@@ -118,11 +119,20 @@ class CdcEngine:
         # max_by it uses against the target — a standalone lww_dedupe here
         # would add a second full shuffle per epoch for nothing (the
         # operator remains available for standalone use).
-        metrics = self.lake.merge_into(
-            valid, epoch_id, probe_src=probe_src, mode=self.merge_mode,
-            lww=self.lww_strategy, probe=probe,
+        try:
+            metrics = self.lake.merge_into(
+                valid, epoch_id, probe_src=probe_src, mode=self.merge_mode,
+                lww=self.lww_strategy, probe=probe, side_write=dlq,
+            )
+        finally:
+            if dlq is not None:
+                # no Spark job of this epoch outlives the call, even when
+                # the merge failed before awaiting the DLQ write
+                wait([dlq])
+        res = EpochResult(
+            epoch_id=epoch_id, merge=metrics,
+            quarantined=dlq.result() if dlq is not None else 0,
         )
-        res = EpochResult(epoch_id=epoch_id, merge=metrics, quarantined=n_bad)
         if self.auto_compact_deltas is not None and not metrics.skipped:
             ptrs = self.lake.last_commit()["buckets"]
             if any(
@@ -132,6 +142,41 @@ class CdcEngine:
                 res.compacted = self.lake.compact()
         self.results.append(res)
         return res
+
+    def _split(self, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """(valid, rejected) rows of ``batch``, the valid side past the
+        snapshot cutover.
+
+        Snapshot-cutover filter: after a bootstrap, every event at or
+        below the snapshot LSN is already reflected in the loaded state and
+        MUST be dropped — LWW alone cannot save the one bad case: a key
+        deleted BEFORE the snapshot has no tombstone in it (the snapshot is
+        live rows only), so a stale lsn<=W event for that key would
+        re-insert it. Reading the cutover from persisted table props means
+        a restarted engine on the same root enforces it too."""
+        valid, bad = split_valid(batch, list(self.key_cols))
+        cutover = self.lake.extra_props.get("bootstrap_lsn")
+        if cutover is not None:
+            valid = valid.where(F.col("lsn") > int(cutover))
+        return valid, bad
+
+    def _submit_dlq(self, bad: DataFrame) -> Future:
+        """Append ``bad`` to the DLQ on the engine's one DLQ thread; the
+        future's result is the exact row count, observed on the write (no
+        extra job). The task is wrapped where it is submitted, so its Spark
+        job runs under the caller's job group and local properties."""
+        if self._dlq_pool is None:
+            self._dlq_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="dlq")
+        quarantine_dir = self.quarantine_dir
+
+        def _append() -> int:
+            obs = Observation()
+            bad.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "append"
+            ).parquet(quarantine_dir)
+            return int(obs.get["n"])
+
+        return self._dlq_pool.submit(inheritable_thread_target(self.lake.spark)(_append))
 
     def bootstrap(
         self, snapshot: DataFrame, as_of_lsn: int, epoch_id: int = -1
@@ -197,67 +242,60 @@ class CdcEngine:
         fixed = fix(bad.drop("_reject_reason", "_epoch_id"))
         return self.apply_epoch(fixed, new_epoch_id)
 
-    def _prefetch_probe(self, batch: DataFrame) -> dict[int, tuple[int, int]]:
+    def _prefetch_probe(self, batch: DataFrame) -> dict[int, tuple[int, int]] | None:
         """The touched-bucket/watermark probe over the SAME rows
         ``apply_epoch`` would probe (post-quarantine valid rows, cutover
         filter applied) — runnable on a separate thread so the next
-        epoch's probe overlaps the current epoch's merge job."""
-        valid, _bad = split_valid(batch, list(self.key_cols))
-        cutover = self.lake.extra_props.get("bootstrap_lsn")
-        if cutover is not None:
-            valid = valid.where(F.col("lsn") > int(cutover))
-        return self.lake.probe_batch(valid)
+        epoch's probe overlaps the current epoch's merge job. ``None``
+        (no job) when the merge will not probe (``lake.merge_probes``)."""
+        if not self.lake.merge_probes(self.merge_mode):
+            return None
+        return self.lake.probe_batch(self._split(batch)[0])
 
     def apply_epochs(
         self,
         events: DataFrame,
         epoch_col: str = "epoch_id",
         epoch_ids: list[int] | None = None,
-        prefetch_probes: bool = True,
     ) -> list[EpochResult]:
         """Batch replay: partition the change stream by epoch and apply in
         epoch order. Epoch ids are collected (small: one per micro-batch),
         the events themselves never reach the driver; pass ``epoch_ids``
         when the caller already knows them to skip the discovery job.
 
-        With ``prefetch_probes`` (default) ALL epochs' touched-bucket
-        probes are computed in ONE up-front grouped job
-        (``lake.probe_epochs`` over the post-quarantine valid rows, same
-        cutover filter as ``apply_epoch``): the probe is a serialized
-        plan-time dependency of each merge (it sizes the write salt and
+        When the engine's merges probe (``lake.merge_probes``: CoW, or the
+        first MoR merge into an empty table), every not-yet-committed
+        epoch's touched-bucket probe is computed in ONE up-front grouped
+        job (``lake.probe_epochs`` over the post-quarantine valid rows,
+        same cutover filter as ``apply_epoch``): the probe is a serialized
+        plan-time dependency of each CoW merge (it sizes the write salt and
         picks target buckets), so batching it pays one probe-job latency
-        for the whole replay instead of one per epoch — strictly better
-        than round 4's thread-prefetch, which still ran epoch 0's probe
-        inline and had the background probe competing with the live merge
-        for executor slots. ``False`` runs each epoch's probe inline (the
-        diagnostic / A-B baseline path)."""
+        for the whole replay instead of one per epoch. A MoR engine on a
+        table with a commit runs no probe at all — its delta merges never
+        probe. An epoch the grouped probe did not return (no valid rows, or a
+        source that drifted between the two scans) probes inline too: a
+        missing probe must never publish an empty commit over real rows."""
         if epoch_ids is None:
             epoch_ids = sorted(
                 r[0] for r in events.select(epoch_col).distinct().collect()
             )
-        out = []
-        if not prefetch_probes:
-            for e in epoch_ids:
-                out.append(self.apply_epoch(events.where(F.col(epoch_col) == e), int(e)))
-            return out
-        valid, _bad = split_valid(events, list(self.key_cols))
-        cutover = self.lake.extra_props.get("bootstrap_lsn")
-        if cutover is not None:
-            valid = valid.where(F.col("lsn") > int(cutover))
-        # probe only the epochs this replay applies — a caller replaying a
-        # prefix (warmup, resumed/phased applies) must not pay for the rest
-        probes = self.lake.probe_epochs(
-            valid.where(F.col(epoch_col).isin([int(e) for e in epoch_ids])), epoch_col
-        )
-        for e in epoch_ids:
-            out.append(
-                self.apply_epoch(
-                    events.where(F.col(epoch_col) == e),
-                    int(e),
-                    probe=probes.get(int(e), {}),
-                )
+        probes: dict[int, dict[int, tuple[int, int]]] = {}
+        committed = self.lake.committed_epochs()
+        todo = [int(e) for e in epoch_ids if int(e) not in committed]
+        if todo and self.lake.merge_probes(self.merge_mode):
+            valid = self._split(events)[0]
+            # probe only the epochs this replay applies — a caller replaying
+            # a prefix (warmup, resumed/phased applies) must not pay for the
+            # rest, and a resumed replay must not pay for committed epochs
+            probes = self.lake.probe_epochs(
+                valid.where(F.col(epoch_col).isin(todo)), epoch_col
             )
-        return out
+        return [
+            self.apply_epoch(
+                events.where(F.col(epoch_col) == e), int(e), probe=probes.get(int(e))
+            )
+            for e in epoch_ids
+        ]
 
     def lineage(self) -> list[dict]:
         """Per-epoch lineage from the commit ledger (rows applied, conflict

@@ -120,13 +120,63 @@ def test_quarantine_routing(spark, tmp_path):
     lake = ParquetLakeTable(spark, str(tmp_path / "q"), n_buckets=4)
     dlq = str(tmp_path / "q_dlq")
     engine = CdcEngine(lake=lake, quarantine_dir=dlq)
-    engine.apply_epochs(corrupted)
+    results = engine.apply_epochs(corrupted)
     n_bad = spark.read.parquet(dlq).count()
     n_good = lake.read().count()
-    assert n_bad > 0
+    injected = corrupted.where(F.col("conv_id").isNull()).count()
+    assert n_bad == injected > 0
+    # exact per-epoch reject counts, observed on the DLQ write itself
+    assert sum(r.quarantined for r in results) == injected
     assert n_good == events.count() - n_bad
     reasons = {r[0] for r in spark.read.parquet(dlq).select("_reject_reason").distinct().collect()}
     assert reasons == {"null_conv_id"}
+
+
+def test_epoch_missing_from_grouped_probe_still_lands(spark, tmp_path, monkeypatch):
+    """An epoch the grouped probe does not return must probe inline, never
+    publish an empty commit over its rows (which would also mark it
+    committed forever)."""
+    events = change_events(spark, CASES["updates"]).cache()
+    orig = ParquetLakeTable.probe_epochs
+    dropped = []
+
+    def lossy(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        e = sorted(out)[-1]
+        assert out[e]  # a non-empty epoch
+        del out[e]
+        dropped.append(e)
+        return out
+
+    monkeypatch.setattr(ParquetLakeTable, "probe_epochs", lossy)
+    got, engine = engine_rows(spark, events, tmp_path, "lossy")
+    assert dropped and got == oracle_rows(events)
+    res = {r.epoch_id: r for r in engine.results}[dropped[0]]
+    assert res.merge.rows_applied > 0 and res.merge.buckets_touched > 0
+    events.unpersist()
+
+
+def test_grouped_probe_skips_committed_epochs(spark, tmp_path, monkeypatch):
+    events = change_events(spark, CASES["updates"]).cache()
+    lake = ParquetLakeTable(spark, str(tmp_path / "resume"), n_buckets=8)
+    engine = CdcEngine(lake=lake)
+    engine.apply_epochs(events, epoch_ids=[0, 1])
+    orig = ParquetLakeTable.probe_epochs
+    probed = []
+
+    def spy(self, pdf, epoch_col="epoch_id", *a, **kw):
+        probed.append(sorted(r[0] for r in pdf.select(epoch_col).distinct().collect()))
+        return orig(self, pdf, epoch_col, *a, **kw)
+
+    monkeypatch.setattr(ParquetLakeTable, "probe_epochs", spy)
+    engine.apply_epochs(events)
+    assert probed == [[2]]
+    # a replay with every epoch committed runs no grouped probe at all
+    engine.apply_epochs(events)
+    assert probed == [[2]]
+    rows = sorted(tuple(r) for r in lake.read().select(*COLS).collect())
+    assert rows == oracle_rows(events)
+    events.unpersist()
 
 
 def test_quarantine_reprocess(spark, tmp_path):

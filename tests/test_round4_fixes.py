@@ -1,8 +1,9 @@
 """Round-4 engine changes pinned:
 
-* probe prefetch (runner.apply_epochs prefetch_probes): the concurrent
-  next-epoch probe must be a pure latency optimization — final state,
-  watermarks and conflict metrics identical to the serial path;
+* grouped probe (runner.apply_epochs → lake.probe_epochs): probing every
+  epoch in one up-front job must be a pure latency optimization — final
+  state, watermarks and conflict metrics identical to a loop of
+  apply_epoch, each epoch probing inline;
 * lake.probe_batch == the inline probe merge_into runs;
 * commit-manifest cache: reopened handles (cold cache) agree with the
   writing handle (warm cache) on epochs/history;
@@ -40,8 +41,12 @@ def test_apply_epochs_prefetch_equals_serial(spark, tmp_path):
     ev = _events(spark)
     a = CdcEngine(lake=ParquetLakeTable(spark, str(tmp_path / "a"), n_buckets=8))
     b = CdcEngine(lake=ParquetLakeTable(spark, str(tmp_path / "b"), n_buckets=8))
-    ra = a.apply_epochs(ev, prefetch_probes=True)
-    rb = b.apply_epochs(ev, prefetch_probes=False)
+    ra = a.apply_epochs(ev)
+    rb = [
+        b.apply_epoch(ev.where(F.col("epoch_id") == e), e)
+        for e in sorted(r[0] for r in ev.select("epoch_id").distinct().collect())
+    ]
+    assert len(ra) == len(rb) == 4
     assert _state(a.lake) == _state(b.lake)
     # identical lineage: per-epoch applied counts, conflicts, watermarks
     for x, y in zip(ra, rb):
