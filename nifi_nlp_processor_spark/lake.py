@@ -22,11 +22,19 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   definition, so staged folds provably agree with single-pass merges), and
   ``compact()`` folds deltas back into one base file per bucket. CoW is
   read-optimal, MoR is write-optimal; mix freely per epoch.
-* **Atomic snapshot commits** — each merge writes data files under a fresh
-  commit directory, then publishes a JSON manifest via atomic ``rename``.
-  The manifest is the commit point: readers only see renamed manifests, and
+* **Atomic snapshot commits** — merge, compact and rebucket share one
+  commit writer (``_commit``): it writes data files under a fresh commit
+  directory, then publishes a JSON manifest via atomic ``rename``. The
+  manifest is the commit point: readers only see renamed manifests, and
   orphaned data files from a crashed merge are invisible (Iceberg snapshot
-  semantics).
+  semantics). A manifest carries everything a reader or the next writer
+  needs: ``seq``, ``epoch_id`` (``null`` for maintenance), the schema
+  file and version, one pointer per bucket (path, schema, rows, optional
+  column stats, MoR deltas), per-bucket LSN watermarks, metrics, and the
+  table layout it was written under — ``n_buckets`` and the bootstrap
+  cutover ``bootstrap_lsn`` — carried forward commit to commit (the
+  Iceberg analogue: the partition spec lives in the snapshot metadata).
+  A layout change is therefore one atomic publish, never a second file.
 * **Exactly-once epochs** — the manifest records ``epoch_id``; re-applying
   an already-committed epoch is a structural no-op (checked before any
   work). This is the epoch-commit ledger of SURVEY §4.2 #2, and the batch
@@ -90,8 +98,9 @@ import os
 import shutil
 import tempfile
 import time
+from collections.abc import Callable
 from concurrent.futures import Future
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -188,6 +197,34 @@ def lww_payload_order(non_key: list[str]) -> tuple:
     return payload, order
 
 
+def _full_schema(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the LWW meta columns: the physical schema of every
+    data file (the bucket is a directory key, never a file column)."""
+    return T.StructType(
+        schema.fields
+        + [
+            T.StructField(META_LSN, T.LongType()),
+            T.StructField(META_DELETED, T.BooleanType()),
+        ]
+    )
+
+
+def _write_json(path: str, obj) -> None:
+    """Publish ``obj`` at ``path`` atomically (mkstemp + rename, mode 0644):
+    a reader sees the whole file or none of it. Manifests, schema files and
+    ``_table.json`` all go through here; a failed write removes its tmp
+    file (``fsck`` lists any a killed process left)."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".tmp-")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(obj, fh)
+        os.chmod(tmp, 0o644)
+        os.rename(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
+
+
 def align(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Project df onto ``schema``: missing columns become typed nulls,
     present columns are cast (the read path for old-schema data files)."""
@@ -217,26 +254,11 @@ class MergeMetrics:
     lsn_watermarks: dict[str, int] = field(default_factory=dict)
     wall_sec: float = 0.0
     probe_sec: float = 0.0  # staging scan + touched-bucket/watermark probe
-    write_sec: float = 0.0  # merge aggregation + salted bucket write
+    # merge aggregation + salted bucket write + its footer/stats pass
+    write_sec: float = 0.0
 
     def as_dict(self) -> dict:
-        return {
-            "epoch_id": self.epoch_id,
-            "mode": self.mode,
-            "skipped": self.skipped,
-            "rows_in_batch": self.rows_in_batch,
-            "keys_in_batch": self.keys_in_batch,
-            "rows_applied": self.rows_applied,
-            "updated": self.updated,
-            "inserted": self.inserted,
-            "deleted": self.deleted,
-            "stale": self.stale,
-            "buckets_touched": self.buckets_touched,
-            "lsn_watermarks": self.lsn_watermarks,
-            "wall_sec": self.wall_sec,
-            "probe_sec": self.probe_sec,
-            "write_sec": self.write_sec,
-        }
+        return asdict(self)
 
 
 class ParquetLakeTable:
@@ -251,59 +273,87 @@ class ParquetLakeTable:
         n_buckets: int = 32,
         stats_cols: tuple[str, ...] = (),
     ):
-        """``key_cols``/``bucket_key``/``n_buckets`` are CREATION-time
-        properties. They are persisted in ``_table.json`` next to the data
-        (the Iceberg analogue: the partition spec lives in table metadata,
-        not in reader code), and re-opening an existing root ADOPTS the
-        stored values — otherwise a second writer opened with a different
-        bucket count would route a key's new rows to a different bucket
-        than its history lives in, and the per-bucket merge would silently
-        duplicate the key. Change the layout via ``rebucket``, never via
-        constructor args."""
+        """``key_cols``/``bucket_key``/``n_buckets``/``stats_cols`` are
+        CREATION-time properties, persisted in ``_table.json`` next to the
+        data, and re-opening an existing root ADOPTS the stored values.
+        From the first commit on, the bucket count a key routes by is the
+        one its manifest carries (module doc): a handle always acts under
+        the layout of the manifest it reads, so a writer opened with a
+        different count can never route a key's new rows away from its
+        history. Change the layout via ``rebucket``, never via constructor
+        args."""
         self.spark = spark
         self.root = root
         self._commit_cache: dict[str, dict] = {}
         self._schema_cache: dict[str, T.StructType] = {}
+        # the bootstrap cutover staged for a table's first commit
+        self._cutover: int | None = None
         os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
         os.makedirs(os.path.join(root, "_schema"), exist_ok=True)
         props_path = os.path.join(root, "_table.json")
         if os.path.exists(props_path):
             with open(props_path) as fh:
-                props = json.load(fh)
-            self.key_cols = list(props["key_cols"])
-            self.bucket_key = props["bucket_key"]
-            self.n_buckets = int(props["n_buckets"])
-            self.stats_cols = list(props.get("stats_cols", []))
-            self.extra_props = dict(props.get("extra", {}))
+                self._props = json.load(fh)
         else:
-            self.key_cols = list(key_cols)
-            self.bucket_key = bucket_key
-            self.n_buckets = n_buckets
-            self.stats_cols = list(stats_cols)
-            self.extra_props = {}
+            self._props = {
+                "key_cols": list(key_cols),
+                "bucket_key": bucket_key,
+                "n_buckets": n_buckets,
+                "stats_cols": list(stats_cols),
+                "extra": {},
+            }
             self._write_props()
+        self.key_cols = list(self._props["key_cols"])
+        self.bucket_key = self._props["bucket_key"]
+        self.stats_cols = list(self._props.get("stats_cols", []))
+        self._commit_files()  # finds the head manifest and its layout
 
     def _write_props(self) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix=".tmp-props-")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(
-                {
-                    "key_cols": self.key_cols,
-                    "bucket_key": self.bucket_key,
-                    "n_buckets": self.n_buckets,
-                    "stats_cols": self.stats_cols,
-                    "extra": self.extra_props,
-                },
-                fh,
-            )
-        os.rename(tmp, os.path.join(self.root, "_table.json"))
+        _write_json(os.path.join(self.root, "_table.json"), self._props)
 
-    def set_extra_prop(self, key: str, value) -> None:
-        """Persist an engine-level table property (Iceberg table-properties
-        analogue) — e.g. the bootstrap LSN cutover — atomically alongside
-        the layout, so any writer reopening the root adopts it."""
-        self.extra_props[key] = value
-        self._write_props()
+    # ---- layout -----------------------------------------------------
+    #
+    # The bucket count and the bootstrap cutover live in every manifest.
+    # The handle reads them from the newest manifest it has listed: each
+    # ledger call lists ``_commits`` anyway and ``_publish`` moves the head,
+    # so reading the layout costs no listdir of its own.
+
+    def _layout(self, c: dict | None) -> dict:
+        """``{n_buckets, bootstrap_lsn}`` manifest ``c`` acts under. A
+        manifest written before they were stamped falls back to
+        ``_table.json``; no manifest at all means the creation-time bucket
+        count and the cutover a bootstrap has staged."""
+        if c is None:
+            return {"n_buckets": int(self._props["n_buckets"]), "bootstrap_lsn": self._cutover}
+        return {
+            "n_buckets": int(c.get("n_buckets", self._props["n_buckets"])),
+            "bootstrap_lsn": c.get(
+                "bootstrap_lsn", self._props.get("extra", {}).get("bootstrap_lsn")
+            ),
+        }
+
+    def _head_commit(self) -> dict | None:
+        return self._read_commit(self._head) if self._head else None
+
+    @property
+    def n_buckets(self) -> int:
+        """Bucket count of the newest manifest this handle has listed."""
+        return self._layout(self._head_commit())["n_buckets"]
+
+    @property
+    def bootstrap_lsn(self) -> int | None:
+        """Snapshot cutover of the newest manifest this handle has listed
+        (``None``: never bootstrapped). Events at or below it are already
+        in the table (``CdcEngine.bootstrap``)."""
+        return self._layout(self._head_commit())["bootstrap_lsn"]
+
+    @bootstrap_lsn.setter
+    def bootstrap_lsn(self, lsn: int | None) -> None:
+        """Stage the cutover the table's first commit stamps (``None``
+        clears it); every later commit carries it forward unchanged."""
+        if lsn is not None and self._head is not None:
+            raise ValueError("the bootstrap cutover is set by a table's first commit")
+        self._cutover = lsn
 
     # ---- commit log -------------------------------------------------
     #
@@ -318,7 +368,9 @@ class ParquetLakeTable:
 
     def _commit_files(self) -> list[str]:
         d = os.path.join(self.root, "_commits")
-        return sorted(f for f in os.listdir(d) if f.startswith("commit-"))
+        files = sorted(f for f in os.listdir(d) if f.startswith("commit-"))
+        self._head = files[-1] if files else None
+        return files
 
     def _read_commit(self, fname: str) -> dict:
         c = self._commit_cache.get(fname)
@@ -347,11 +399,10 @@ class ParquetLakeTable:
 
     def commit_at(self, seq: int) -> dict:
         """Manifest of snapshot ``seq`` (time travel anchor)."""
-        path = os.path.join(self.root, "_commits", f"commit-{seq:08d}.json")
-        if not os.path.exists(path):
-            raise ValueError(f"no snapshot with seq {seq}")
-        with open(path) as fh:
-            return json.load(fh)
+        try:
+            return self._read_commit(f"commit-{seq:08d}.json")
+        except FileNotFoundError:
+            raise ValueError(f"no snapshot with seq {seq}") from None
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Iceberg expire_snapshots analogue: reclaim data of snapshots
@@ -423,18 +474,18 @@ class ParquetLakeTable:
                 raise ValueError("cannot tag an empty table")
             seq = head["seq"]
         self.commit_at(int(seq))  # raises if no such snapshot
-        tags = dict(self.extra_props.get("tags", {}))
-        tags[name] = int(seq)
-        self.set_extra_prop("tags", tags)
+        self._write_tags({**self.tags(), name: int(seq)})
         return int(seq)
 
     def drop_tag(self, name: str) -> None:
-        tags = dict(self.extra_props.get("tags", {}))
-        tags.pop(name, None)
-        self.set_extra_prop("tags", tags)
+        self._write_tags({k: v for k, v in self.tags().items() if k != name})
 
     def tags(self) -> dict[str, int]:
-        return {k: int(v) for k, v in self.extra_props.get("tags", {}).items()}
+        return {k: int(v) for k, v in self._props.get("extra", {}).get("tags", {}).items()}
+
+    def _write_tags(self, tags: dict[str, int]) -> None:
+        self._props.setdefault("extra", {})["tags"] = tags
+        self._write_props()
 
     def read_tag(self, name: str) -> DataFrame:
         """Snapshot read by tag name — time travel with a stable handle."""
@@ -460,7 +511,9 @@ class ParquetLakeTable:
           manifest publish — the atomic-rename commit protocol makes them
           invisible but they hold disk) or in-flight (``seq >`` head: an
           unpublished writer may still be running — never touched);
-        * stale ``.tmp-*`` manifest droppings from interrupted publishes.
+        * stale ``.tmp-*`` droppings of interrupted atomic JSON writes —
+          manifests, schema files, ``_table.json`` (``tmp_files``, paths
+          relative to the root).
 
         With ``repair=True`` dead orphan dirs and tmp droppings are
         deleted. This is ZERO-data-loss repair — unlike
@@ -476,7 +529,7 @@ class ParquetLakeTable:
             "missing_paths": [],
             "dead_orphan_dirs": [],
             "inflight_dirs": [],
-            "tmp_manifests": [],
+            "tmp_files": [],
             "removed": [],
             "ok": True,
         }
@@ -513,8 +566,11 @@ class ParquetLakeTable:
                     continue
                 kind = "inflight_dirs" if seq > max_seq else "dead_orphan_dirs"
                 report[kind].append(d)
-        report["tmp_manifests"] = sorted(
-            f for f in os.listdir(commits_dir) if f.startswith(".tmp-")
+        report["tmp_files"] = sorted(
+            os.path.join(d, f)
+            for d in ("_commits", "_schema", "")
+            for f in os.listdir(os.path.join(self.root, d))
+            if f.startswith(".tmp-")
         )
         report["ok"] = not (
             report["bad_manifests"] or report["missing_paths"]
@@ -523,9 +579,9 @@ class ParquetLakeTable:
             for d in report["dead_orphan_dirs"]:
                 shutil.rmtree(os.path.join(data_root, d), ignore_errors=True)
                 report["removed"].append(f"data/{d}")
-            for f in report["tmp_manifests"]:
-                os.remove(os.path.join(commits_dir, f))
-                report["removed"].append(f"_commits/{f}")
+            for f in report["tmp_files"]:
+                os.remove(os.path.join(self.root, f))
+                report["removed"].append(f)
         return report
 
     def compact(self, min_files: int = 2) -> dict:
@@ -550,14 +606,6 @@ class ParquetLakeTable:
         prev = self.last_commit()
         if prev is None:
             return {"buckets_compacted": 0, "files_before": 0, "files_after": 0, "seq": 0}
-        schema = self.current_schema()
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
 
         def _files(ptr: dict) -> list[str]:
             out = []
@@ -583,62 +631,24 @@ class ParquetLakeTable:
                 "files_after": 0,
                 "seq": prev["seq"],
             }
-        seq = prev["seq"] + 1
-        commit_dir, abs_dir = self._fresh_commit_dir(seq)
-        df = self._read_manifest_buckets(prev, sorted(todo), full).withColumn(
-            BUCKET_COL, self._bucket_expr()
-        )
+        df = self._read_manifest_buckets(
+            prev, sorted(todo), self._file_schema(prev["schema"])
+        ).withColumn(BUCKET_COL, self._bucket_expr(self._layout(prev)["n_buckets"]))
         # one task per bucket → one output file per bucket, sorted on the
         # merge key so row groups stay range-clustered for turn scans
-        (
-            df.repartition(len(todo), F.col(BUCKET_COL))
-            .sortWithinPartitions(*self.key_cols)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(abs_dir)
-        )
-        buckets = dict(prev["buckets"])
-        schema_name = prev["schema"]
-        cstats = (
-            self._collect_part_stats(abs_dir, self.current_schema())
-            if self.stats_cols
-            else {}
-        )
-        footers = self._part_footers(abs_dir)
-        for d in os.listdir(abs_dir):
-            if d.startswith(f"{BUCKET_COL}="):
-                b = d.split("=")[1]
-                buckets[b] = {
-                    "path": f"{commit_dir}/{d}",
-                    "schema": schema_name,
-                    "rows": footers[int(b)][0],
-                }
-                if int(b) in cstats:
-                    buckets[b]["stats"] = cstats[int(b)]
-        files_after = sum(
-            len(_files(buckets[b])) for b in todo
-        )
-        commit = {
-            "seq": seq,
-            "epoch_id": None,  # maintenance commit: not an epoch
-            "schema": schema_name,
-            "schema_version": prev["schema_version"],
-            "buckets": buckets,
-            "watermarks": prev.get("watermarks", {}),
-            "metrics": {
-                "maintenance": "compact",
-                "buckets_compacted": len(todo),
-                "files_before": files_before,
-                "files_after": files_after,
-            },
-        }
-        self._publish(commit)
-        return {
-            "buckets_compacted": len(todo),
-            "files_before": files_before,
-            "files_after": files_after,
-            "seq": seq,
-        }
+        df = df.repartition(len(todo), F.col(BUCKET_COL)).sortWithinPartitions(*self.key_cols)
+        out = {"buckets_compacted": len(todo), "files_before": files_before}
+
+        def manifest(parts: dict, _footers: dict) -> dict:
+            buckets = {**prev["buckets"], **{str(b): p for b, p in parts.items()}}
+            out["files_after"] = sum(len(_files(buckets[b])) for b in todo)
+            return {
+                "buckets": buckets,
+                "watermarks": prev.get("watermarks", {}),
+                "metrics": {"maintenance": "compact", **out},
+            }
+
+        return {"seq": self._commit(prev, df, prev["schema"], manifest)["seq"], **out}
 
     def rebucket(self, n_buckets: int) -> dict:
         """Bucket-layout evolution (the Iceberg partition-spec-evolution
@@ -653,92 +663,54 @@ class ParquetLakeTable:
         rows (provably equal to the old maxima, regrouped — every key's
         stored winner carries the max LSN applied to it), and old snapshots
         keep time-traveling under their own layout because bucket pointers
-        are path-based. A ``table_changes`` diff that crosses a rebucket
-        boundary sees every pointer changed and falls back to a full-scan
-        diff — correct, just unpruned (documented trade).
+        are path-based and each manifest carries its own ``n_buckets``. A
+        ``table_changes`` diff that crosses a rebucket boundary sees every
+        pointer changed and falls back to a full-scan diff — correct, just
+        unpruned (documented trade).
+
+        The new bucket count is stamped in the maintenance commit itself,
+        so the rewrite and the layout change are one atomic publish: a
+        crash leaves either the old layout with the old data or the new
+        layout with the new data. A table with no commit yet has no
+        manifest to carry it; its creation-time count in ``_table.json``
+        changes instead.
 
         Returns ``{seq, n_buckets_before, n_buckets_after, rows}``."""
         if n_buckets < 1:
             raise ValueError("n_buckets must be >= 1")
         prev = self.last_commit()
-        before = self.n_buckets
-        if prev is None or not prev["buckets"]:
-            # empty table: a pure metadata change
-            self.n_buckets = n_buckets
+        out = {"n_buckets_before": self._layout(prev)["n_buckets"], "n_buckets_after": n_buckets, "rows": 0}
+        if prev is None:
+            self._props["n_buckets"] = n_buckets
             self._write_props()
+            return {"seq": 0, **out}
+        df = None
+        if prev["buckets"]:
+            obs = Observation("rebucket")
+            salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(WRITE_SALT))
+            df = (
+                self._read_manifest_buckets(
+                    prev, sorted(prev["buckets"]), self._file_schema(prev["schema"])
+                )
+                .withColumn(BUCKET_COL, self._bucket_expr(n_buckets))
+                .observe(obs, F.count(F.lit(1)).alias("rows"))
+                .repartition(n_buckets * WRITE_SALT, F.col(BUCKET_COL), salt)
+                .sortWithinPartitions(*self.key_cols)
+            )
+
+        def manifest(parts: dict, footers: dict) -> dict:
+            if df is not None:
+                out["rows"] = int(obs.get["rows"])
+            # per-bucket watermarks under the new layout, from the written
+            # files' footers (tombstones included) — no pass over the rows
             return {
-                "seq": prev["seq"] if prev else 0,
-                "n_buckets_before": before,
-                "n_buckets_after": n_buckets,
-                "rows": 0,
+                "n_buckets": n_buckets,
+                "buckets": {str(b): p for b, p in parts.items()},
+                "watermarks": {str(b): hi for b, (_n, hi) in footers.items() if hi is not None},
+                "metrics": {"maintenance": "rebucket", **out},
             }
-        schema = self.current_schema()
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
-        df = self._read_manifest_buckets(prev, sorted(prev["buckets"]), full)
-        new_bucket = F.pmod(F.xxhash64(self.bucket_key), F.lit(n_buckets)).cast("int")
-        df = df.withColumn(BUCKET_COL, new_bucket)
-        obs = Observation("rebucket")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        seq = prev["seq"] + 1
-        commit_dir, abs_dir = self._fresh_commit_dir(seq)
-        salt = F.pmod(F.xxhash64(*self.key_cols), F.lit(WRITE_SALT))
-        (
-            df.repartition(n_buckets * WRITE_SALT, F.col(BUCKET_COL), salt)
-            .sortWithinPartitions(*self.key_cols)
-            .write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(abs_dir)
-        )
-        # per-bucket watermarks under the new layout, from the written
-        # files' footers (tombstones included) — no pass over the rows
-        footers = self._part_footers(abs_dir)
-        watermarks = {str(b): hi for b, (_n, hi) in footers.items() if hi is not None}
-        buckets = {}
-        rstats = (
-            self._collect_part_stats(abs_dir, self.current_schema())
-            if self.stats_cols
-            else {}
-        )
-        for d in os.listdir(abs_dir):
-            if d.startswith(f"{BUCKET_COL}="):
-                b = d.split("=")[1]
-                buckets[b] = {
-                    "path": f"{commit_dir}/{d}",
-                    "schema": prev["schema"],
-                    "rows": footers[int(b)][0],
-                }
-                if int(b) in rstats:
-                    buckets[b]["stats"] = rstats[int(b)]
-        n_rows = int(obs.get["rows"])
-        commit = {
-            "seq": seq,
-            "epoch_id": None,  # maintenance commit: not an epoch
-            "schema": prev["schema"],
-            "schema_version": prev["schema_version"],
-            "buckets": buckets,
-            "watermarks": watermarks,
-            "metrics": {
-                "maintenance": "rebucket",
-                "n_buckets_before": before,
-                "n_buckets_after": n_buckets,
-                "rows": n_rows,
-            },
-        }
-        self._publish(commit)
-        self.n_buckets = n_buckets
-        self._write_props()
-        return {
-            "seq": seq,
-            "n_buckets_before": before,
-            "n_buckets_after": n_buckets,
-            "rows": n_rows,
-        }
+
+        return {"seq": self._commit(prev, df, prev["schema"], manifest)["seq"], **out}
 
     def merge_probes(self, mode: str) -> bool:
         """Whether a ``merge_into`` in ``mode`` probes its batch now: a CoW
@@ -747,6 +719,56 @@ class ParquetLakeTable:
         only makes sense against an existing table; a first merge
         degenerates to the (identical) single-pass CoW path."""
         return mode == "cow" or self.last_commit() is None
+
+    def _commit(
+        self,
+        prev: dict | None,
+        df: DataFrame | None,
+        schema_name: str,
+        manifest: Callable[[dict, dict], dict],
+        side_write: Future | None = None,
+    ) -> dict:
+        """The one commit writer (``merge_into``, ``compact``, ``rebucket``).
+        Writes ``df`` — the caller's laid-out rows, ``None`` for a commit
+        without data — into the fresh commit dir of seq ``prev + 1``, one
+        ``_b=`` dir per bucket, and hands ``manifest`` the written parts
+        (``{bucket: part pointer}``, rows and column stats included) and
+        footers (``{bucket: (rows, max _lsn)}``). ``manifest`` returns the
+        commit body under the caller's own rules — buckets, watermarks,
+        metrics, and the ``epoch_id``, ``schema_version`` or ``n_buckets``
+        it sets. Unset, ``epoch_id`` is null (a maintenance commit) and the
+        schema version and the layout (``n_buckets``, ``bootstrap_lsn``) are
+        carried forward from ``prev``. Publishes the commit (``side_write``
+        awaited first) and returns it."""
+        seq = prev["seq"] + 1 if prev else 1
+        parts: dict[int, dict] = {}
+        footers: dict[int, tuple[int, int | None]] = {}
+        if df is not None:
+            commit_dir, abs_dir = self._fresh_commit_dir(seq)
+            df.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(abs_dir)
+            footers = self._part_footers(abs_dir)
+            stats = (
+                self._collect_part_stats(abs_dir, self._stored_schema(schema_name))
+                if self.stats_cols and footers
+                else {}
+            )
+            if not footers:
+                # nothing survived the caller's filters: an empty commit
+                shutil.rmtree(abs_dir, ignore_errors=True)
+            for b, (rows, _hi) in footers.items():
+                parts[b] = {"path": f"{commit_dir}/{BUCKET_COL}={b}", "schema": schema_name, "rows": rows}
+                if b in stats:
+                    parts[b]["stats"] = stats[b]
+        commit = {
+            "seq": seq,
+            "epoch_id": None,
+            "schema": schema_name,
+            "schema_version": prev["schema_version"] if prev else 1,
+            **self._layout(prev),
+            **manifest(parts, footers),
+        }
+        self._publish(commit, side_write)
+        return commit
 
     def _fresh_commit_dir(self, seq: int) -> tuple[str, str]:
         """(relative, absolute) data dir of the unpublished commit ``seq``,
@@ -767,12 +789,9 @@ class ParquetLakeTable:
         it is awaited first, and its failure leaves the commit unpublished."""
         if side_write is not None:
             side_write.result()
-        seq = commit["seq"]
-        d = os.path.join(self.root, "_commits")
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp-")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(commit, fh)
-        os.rename(tmp, os.path.join(d, f"commit-{seq:08d}.json"))
+        fname = f"commit-{commit['seq']:08d}.json"
+        _write_json(os.path.join(self.root, "_commits", fname), commit)
+        self._head = fname
 
     # ---- schema -----------------------------------------------------
 
@@ -800,26 +819,15 @@ class ParquetLakeTable:
         to ``spark.read.schema(...)`` skips parquet footer schema
         inference — a per-epoch driver cost on the merge's target read
         that grows with the touched buckets' file counts."""
-        return T.StructType(
-            self._stored_schema(sname).fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
+        return _full_schema(self._stored_schema(sname))
 
     def _write_schema(self, schema: T.StructType, version: int) -> str:
-        # published atomically (mkstemp + rename, same as _publish): the
-        # per-handle schema cache and the inference-free read path depend
-        # on a schema file being immutable-and-complete once its name is
-        # visible — a fresh reader handle racing this writer must never
-        # see a partial file
+        # published atomically (same as _publish): the per-handle schema
+        # cache and the inference-free read path depend on a schema file
+        # being immutable-and-complete once its name is visible — a fresh
+        # reader handle racing this writer must never see a partial file
         name = f"v{version:04d}.json"
-        d = os.path.join(self.root, "_schema")
-        fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp-schema-")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(schema.jsonValue(), fh)
-        os.rename(tmp, os.path.join(d, name))
+        _write_json(os.path.join(self.root, "_schema", name), schema.jsonValue())
         return name
 
     # ---- read -------------------------------------------------------
@@ -829,31 +837,17 @@ class ParquetLakeTable:
         travels to an older manifest (valid while its data dirs survive
         ``expire_snapshots``)."""
         c = self.commit_at(at_seq) if at_seq is not None else self.last_commit()
-        schema = self._stored_schema(c["schema"]) if c is not None else None
         if c is None or not c["buckets"]:
-            meta = T.StructType(
-                [
-                    T.StructField(META_LSN, T.LongType()),
-                    T.StructField(META_DELETED, T.BooleanType()),
-                    T.StructField(BUCKET_COL, T.IntegerType()),
-                ]
+            base = self._stored_schema(c["schema"]) if c is not None else T.StructType([])
+            return self.spark.createDataFrame(
+                [], _full_schema(base).add(BUCKET_COL, T.IntegerType())
             )
-            base = schema or T.StructType([])
-            return self.spark.createDataFrame([], T.StructType(base.fields + meta.fields))
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
         # shared delta-aware reader: old-schema files are cast-aligned, and
         # buckets holding merge-on-read deltas are LWW-folded on the way out
-        out = self._read_manifest_buckets(c, sorted(c["buckets"]), full)
-        # partitionBy writes the bucket as a directory key; recover it
-        return out.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(self.bucket_key), F.lit(self.n_buckets)).cast("int")
-        )
+        out = self._read_manifest_buckets(c, sorted(c["buckets"]), self._file_schema(c["schema"]))
+        # partitionBy writes the bucket as a directory key; recover it under
+        # the layout of the snapshot read, not the table's current one
+        return out.withColumn(BUCKET_COL, self._bucket_expr(self._layout(c)["n_buckets"]))
 
     def read(self, at_seq: int | None = None) -> DataFrame:
         """Live rows (tombstones filtered, meta dropped); ``at_seq`` reads
@@ -1015,16 +1009,7 @@ class ParquetLakeTable:
             if not skip:
                 keep.append(b)
 
-        with open(os.path.join(self.root, "_schema", c["schema"])) as fh:
-            schema = T.StructType.fromJson(json.load(fh))
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
-        out = self._read_manifest_buckets(c, sorted(keep), full)
+        out = self._read_manifest_buckets(c, sorted(keep), self._file_schema(c["schema"]))
         out = out.where(~F.col(META_DELETED)).drop(META_LSN, META_DELETED)
         for col, (lo, hi) in predicates.items():
             if lo is not None:
@@ -1152,15 +1137,8 @@ class ParquetLakeTable:
             c_from: dict = {"buckets": {}}
         else:
             c_from = self.commit_at(from_seq)
-        with open(os.path.join(self.root, "_schema", c_to["schema"])) as fh:
-            schema = T.StructType.fromJson(json.load(fh))
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
+        schema = self._stored_schema(c_to["schema"])
+        full = _full_schema(schema)
         changed = sorted(
             b
             for b in set(c_from["buckets"]) | set(c_to["buckets"])
@@ -1216,8 +1194,10 @@ class ParquetLakeTable:
 
     # ---- merge ------------------------------------------------------
 
-    def _bucket_expr(self):
-        return F.pmod(F.xxhash64(self.bucket_key), F.lit(self.n_buckets)).cast("int")
+    def _bucket_expr(self, n: int):
+        """A row's bucket under an ``n``-bucket layout: readers and merges
+        pass the ``n_buckets`` of the manifest they act on."""
+        return F.pmod(F.xxhash64(self.bucket_key), F.lit(n)).cast("int")
 
     def probe_batch(
         self, pdf: DataFrame, lsn_col: str = "lsn"
@@ -1240,7 +1220,7 @@ class ParquetLakeTable:
             r[0]: (r[1], r[2])
             for r in pdf.where(F.col(lsn_col).isNotNull())
             .select(
-                self._bucket_expr().alias(BUCKET_COL),
+                self._bucket_expr(self.n_buckets).alias(BUCKET_COL),
                 F.col(lsn_col).cast("long").alias(META_LSN),
             )
             .groupBy(BUCKET_COL)
@@ -1264,7 +1244,7 @@ class ParquetLakeTable:
             pdf.where(F.col(lsn_col).isNotNull())
             .select(
                 F.col(epoch_col).cast("long").alias("_e"),
-                self._bucket_expr().alias(BUCKET_COL),
+                self._bucket_expr(self.n_buckets).alias(BUCKET_COL),
                 F.col(lsn_col).cast("long").alias(META_LSN),
             )
             .groupBy("_e", BUCKET_COL)
@@ -1359,7 +1339,7 @@ class ParquetLakeTable:
             return MergeMetrics(epoch_id=epoch_id, skipped=True)
 
         prev = self.last_commit()
-        seq = (prev["seq"] + 1) if prev else 1
+        n = self._layout(prev)["n_buckets"]
         data_cols = [c for c in src.columns if c not in (lsn_col, op_col, "epoch_id")]
         incoming = T.StructType([f for f in src.schema.fields if f.name in data_cols])
         current = self.current_schema()
@@ -1384,7 +1364,7 @@ class ParquetLakeTable:
                 (F.col(op_col) == "D").alias(META_DELETED),
             )
             .where(F.col(META_LSN).isNotNull())
-            .withColumn(BUCKET_COL, self._bucket_expr())
+            .withColumn(BUCKET_COL, self._bucket_expr(n))
         )
         mor_delta = not self.merge_probes(mode)
 
@@ -1403,25 +1383,16 @@ class ParquetLakeTable:
             )
         t_probe = time.time() - t_probe
         if not mor_delta and not probe:
-            commit = {
-                "seq": seq,
+            commit = self._commit(prev, None, schema_name, lambda _p, _f: {
                 "epoch_id": epoch_id,
-                "schema": schema_name,
                 "schema_version": version,
                 "buckets": prev["buckets"] if prev else {},
                 "watermarks": prev.get("watermarks", {}) if prev else {},
                 "metrics": MergeMetrics(epoch_id=epoch_id).as_dict(),
-            }
-            self._publish(commit, side_write)
-            return MergeMetrics(epoch_id=epoch_id)
+            }, side_write)
+            return MergeMetrics(**commit["metrics"])
 
-        full = T.StructType(
-            schema.fields
-            + [
-                T.StructField(META_LSN, T.LongType()),
-                T.StructField(META_DELETED, T.BooleanType()),
-            ]
-        )
+        full = _full_schema(schema)
         tgt_parts = []
         if not mor_delta and prev:
             by_schema: dict[str, list[str]] = {}
@@ -1441,7 +1412,7 @@ class ParquetLakeTable:
                 # with touched buckets × salt files — pure fixed cost)
                 df = self.spark.read.schema(self._file_schema(sname)).parquet(*paths)
                 tgt_parts.append(
-                    align(df, full).withColumn(BUCKET_COL, self._bucket_expr())
+                    align(df, full).withColumn(BUCKET_COL, self._bucket_expr(n))
                 )
 
         src_tagged = src_rows.withColumn("_src", F.lit(True))
@@ -1585,106 +1556,86 @@ class ParquetLakeTable:
         )
         out = out.select(*final_cols)
 
-        commit_dir, abs_dir = self._fresh_commit_dir(seq)
         t_write = time.time()
-        writer = out
         if lww == "agg":
             # the agg output is distributed by the grouping hash; lay it out
             # for the write, sorted on the key (the window strategy already
             # produced exactly this layout — T3 stable in-partition order —
             # so it writes as-is with no exchange)
-            writer = (
+            out = (
                 lay_out(out)
                 .sortWithinPartitions(BUCKET_COL, *self.key_cols)
                 .drop("_salt")
             )
-        (
-            writer.write.partitionBy(BUCKET_COL)
-            .mode("overwrite")
-            .parquet(abs_dir)
-        )
-        t_write = time.time() - t_write
-        m = obs.get
 
-        # the buckets this merge wrote, with each one's rows and _lsn
-        # maximum, from the written footers — no pass over the data
-        footers = self._part_footers(abs_dir)
-        present = set(footers)
-        if mor_delta:
-            batch_max = {b: hi for b, (_n, hi) in footers.items()}
-            if not present:
-                # nothing survived the batch's filters: an empty commit
-                shutil.rmtree(abs_dir, ignore_errors=True)
-        else:
-            # Probe-contract guard: every bucket this merge actually wrote
-            # must have been probe-touched. A caller-supplied ``probe`` that
-            # misses a written bucket (stale prefetch, probe over different
-            # rows, a non-deterministic source re-evaluated between probe
-            # and merge) would otherwise silently replace that bucket's
-            # pointer with a batch-only fold — permanently dropping its
-            # existing rows. Abort BEFORE _publish: the orphaned data dir is
-            # retired by expire_snapshots, the table is untouched.
-            unprobed = present - {int(b) for b in probe}
-            if unprobed:
-                raise RuntimeError(
-                    f"merge wrote buckets {sorted(unprobed)} the probe never "
-                    "touched — the probe must come from probe_batch over the "
-                    "exact post-filter rows of a deterministic source "
-                    "(epoch not committed)"
-                )
-            batch_max = {b: src_max for b, (src_max, _n) in probe.items()}
-        # per-bucket LSN watermarks for lineage/resume metrics: a touched
-        # bucket's new watermark is max(previous watermark, batch maximum)
-        new_watermarks = dict(prev.get("watermarks", {})) if prev else {}
-        for b, hi in batch_max.items():
-            cur = new_watermarks.get(str(b))
-            new_watermarks[str(b)] = max(int(hi), int(cur)) if cur is not None else int(hi)
-
-        buckets = dict(prev["buckets"]) if prev else {}
-        part_stats = self._collect_part_stats(abs_dir, schema) if self.stats_cols and present else {}
-        for b in present:
-            part = {
-                "path": f"{commit_dir}/{BUCKET_COL}={b}",
-                "schema": schema_name,
-                "rows": footers[b][0],
-            }
-            if b in part_stats:
-                part["stats"] = part_stats[b]
-            if mor_delta and str(b) in buckets:
-                # append a delta file set; the base pointer (and any earlier
-                # deltas) stay — readers fold, compact() retires
-                ptr = dict(buckets[str(b)])
-                ptr["deltas"] = list(ptr.get("deltas", [])) + [part]
-                buckets[str(b)] = ptr
+        def manifest(parts: dict, footers: dict) -> dict:
+            # parts/footers: the buckets this merge wrote, with each one's
+            # rows and _lsn maximum, from the written footers
+            if mor_delta:
+                batch_max = {b: hi for b, (_n, hi) in footers.items()}
             else:
-                # CoW rewrite, or first data for this bucket (a fold of the
-                # batch alone IS the merged state when there is no base)
-                buckets[str(b)] = part
+                # Probe-contract guard: every bucket this merge actually
+                # wrote must have been probe-touched. A caller-supplied
+                # ``probe`` that misses a written bucket (stale prefetch,
+                # probe over different rows, a non-deterministic source
+                # re-evaluated between probe and merge) would otherwise
+                # silently replace that bucket's pointer with a batch-only
+                # fold — permanently dropping its existing rows. Abort
+                # BEFORE _publish: the orphaned data dir is retired by
+                # expire_snapshots, the table is untouched.
+                unprobed = set(parts) - {int(b) for b in probe}
+                if unprobed:
+                    raise RuntimeError(
+                        f"merge wrote buckets {sorted(unprobed)} the probe never "
+                        "touched — the probe must come from probe_batch over the "
+                        "exact post-filter rows of a deterministic source "
+                        "(epoch not committed)"
+                    )
+                batch_max = {b: src_max for b, (src_max, _n) in probe.items()}
+            # per-bucket LSN watermarks for lineage/resume metrics: a touched
+            # bucket's new watermark is max(previous watermark, batch maximum)
+            watermarks = dict(prev.get("watermarks", {})) if prev else {}
+            for b, hi in batch_max.items():
+                cur = watermarks.get(str(b))
+                watermarks[str(b)] = max(int(hi), int(cur)) if cur is not None else int(hi)
 
-        metrics = MergeMetrics(
-            epoch_id=epoch_id,
-            mode=mode,
-            rows_in_batch=-1,  # caller may fill; avoiding an extra count job
-            keys_in_batch=-1,
-            rows_applied=int(m["rows_applied"]),
-            updated=int(m["updated"] or 0) if not mor_delta else -1,
-            inserted=int(m["inserted"] or 0) if not mor_delta else -1,
-            deleted=int(m["deleted"] or 0) if not mor_delta else -1,
-            stale=int(m["stale"] or 0) if not mor_delta else -1,
-            buckets_touched=len(present),
-            lsn_watermarks={str(b): new_watermarks[str(b)] for b in present},
-            wall_sec=time.time() - t0,
-            probe_sec=round(t_probe, 3),
-            write_sec=round(t_write, 3),
-        )
-        commit = {
-            "seq": seq,
-            "epoch_id": epoch_id,
-            "schema": schema_name,
-            "schema_version": version,
-            "buckets": buckets,
-            "watermarks": new_watermarks,
-            "metrics": metrics.as_dict(),
-        }
-        self._publish(commit, side_write)
-        return metrics
+            buckets = dict(prev["buckets"]) if prev else {}
+            for b, part in parts.items():
+                if mor_delta and str(b) in buckets:
+                    # append a delta file set; the base pointer (and any
+                    # earlier deltas) stay — readers fold, compact() retires
+                    ptr = dict(buckets[str(b)])
+                    ptr["deltas"] = list(ptr.get("deltas", [])) + [part]
+                    buckets[str(b)] = ptr
+                else:
+                    # CoW rewrite, or first data for this bucket (a fold of
+                    # the batch alone IS the merged state when there is no base)
+                    buckets[str(b)] = part
+
+            m = obs.get
+            metrics = MergeMetrics(
+                epoch_id=epoch_id,
+                mode=mode,
+                rows_in_batch=-1,  # caller may fill; avoiding an extra count job
+                keys_in_batch=-1,
+                rows_applied=int(m["rows_applied"]),
+                updated=int(m["updated"] or 0) if not mor_delta else -1,
+                inserted=int(m["inserted"] or 0) if not mor_delta else -1,
+                deleted=int(m["deleted"] or 0) if not mor_delta else -1,
+                stale=int(m["stale"] or 0) if not mor_delta else -1,
+                buckets_touched=len(parts),
+                lsn_watermarks={str(b): watermarks[str(b)] for b in parts},
+                wall_sec=time.time() - t0,
+                probe_sec=round(t_probe, 3),
+                write_sec=round(time.time() - t_write, 3),
+            )
+            return {
+                "epoch_id": epoch_id,
+                "schema_version": version,
+                "buckets": buckets,
+                "watermarks": watermarks,
+                "metrics": metrics.as_dict(),
+            }
+
+        commit = self._commit(prev, out, schema_name, manifest, side_write)
+        return MergeMetrics(**commit["metrics"])

@@ -152,10 +152,11 @@ class CdcEngine:
         MUST be dropped — LWW alone cannot save the one bad case: a key
         deleted BEFORE the snapshot has no tombstone in it (the snapshot is
         live rows only), so a stale lsn<=W event for that key would
-        re-insert it. Reading the cutover from persisted table props means
-        a restarted engine on the same root enforces it too."""
+        re-insert it. The cutover is read from the head manifest
+        (``lake.bootstrap_lsn``), which the bootstrap commit itself stamped,
+        so a restarted engine on the same root enforces it too."""
         valid, bad = split_valid(batch, list(self.key_cols))
-        cutover = self.lake.extra_props.get("bootstrap_lsn")
+        cutover = self.lake.bootstrap_lsn
         if cutover is not None:
             valid = valid.where(F.col("lsn") > int(cutover))
         return valid, bad
@@ -188,13 +189,16 @@ class CdcEngine:
         snapshot with full overlap tolerance.
 
         Every snapshot row is stamped ``lsn = as_of_lsn, op = 'I'``; the
-        cutover is persisted in the table properties and ``apply_epoch``
-        thereafter drops events with ``lsn <= as_of_lsn`` (see the comment
-        there for why the filter is required for correctness, not an
-        optimization). Tail events above the cutover win LWW against the
-        snapshot stamp as usual. The snapshot load is itself one idempotent
-        epoch: O(snapshot) bytes written once, shuffled only on the bucket
-        key — at 10^10 events this replaces replaying the entire history.
+        cutover is stamped in the snapshot's own commit manifest (and
+        carried forward by every later commit), and ``apply_epoch``
+        thereafter drops events with ``lsn <= as_of_lsn`` (see ``_split``
+        for why the filter is required for correctness, not an
+        optimization). The load and its cutover are one atomic publish: a
+        crash leaves either an empty lake or a bootstrapped one. Tail events
+        above the cutover win LWW against the snapshot stamp as usual. The
+        snapshot load is itself one idempotent epoch: O(snapshot) bytes
+        written once, shuffled only on the bucket key — at 10^10 events
+        this replaces replaying the entire history.
 
         ``epoch_id`` defaults to -1: streaming batch ids count up from 0,
         so the snapshot's ledger entry can never collide with (and silently
@@ -202,15 +206,16 @@ class CdcEngine:
         """
         if self.lake.committed_epochs():
             raise ValueError("bootstrap requires an empty lake (no committed epochs)")
-        if self.lake.extra_props.get("bootstrap_lsn") is not None:
-            raise ValueError("lake is already bootstrapped")
         src = snapshot.withColumn(
             "lsn", F.lit(int(as_of_lsn)).cast("long")
         ).withColumn("op", F.lit("I"))
-        metrics = self.lake.merge_into(
-            src, epoch_id, mode=self.merge_mode, lww=self.lww_strategy
-        )
-        self.lake.set_extra_prop("bootstrap_lsn", int(as_of_lsn))
+        self.lake.bootstrap_lsn = int(as_of_lsn)  # stamped by the first commit
+        try:
+            metrics = self.lake.merge_into(
+                src, epoch_id, mode=self.merge_mode, lww=self.lww_strategy
+            )
+        finally:
+            self.lake.bootstrap_lsn = None  # unstage; a published head keeps it
         res = EpochResult(epoch_id=epoch_id, merge=metrics)
         self.results.append(res)
         return res

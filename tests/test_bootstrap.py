@@ -52,7 +52,7 @@ def test_bootstrap_plus_overlapping_tail_equals_full_replay(spark, tmp_path):
     # of state already in the snapshot and must be dropped by the cutover
     engine.apply_epochs(ev)
     assert _state(lake) == expected
-    assert lake.extra_props["bootstrap_lsn"] == w
+    assert lake.last_commit()["bootstrap_lsn"] == w
 
 
 def test_stale_event_cannot_resurrect_deleted_key(spark, tmp_path):
@@ -60,6 +60,8 @@ def test_stale_event_cannot_resurrect_deleted_key(spark, tmp_path):
     # before the snapshot at W=10, so the snapshot has no row (and no
     # tombstone) for K. The tail re-delivers the lsn-3 update: without the
     # cutover filter it would merge as the only version of K and win.
+    # Second case: the driver dies right after the snapshot's publish and a
+    # fresh engine runs the tail — the cutover must already be durable.
     tail = spark.createDataFrame(
         [
             (3, "U", 0, "K", 0, "user", "stale text", None, None),
@@ -70,11 +72,24 @@ def test_stale_event_cannot_resurrect_deleted_key(spark, tmp_path):
     empty_snap = spark.createDataFrame(
         [], "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    lake = ParquetLakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
-    engine = CdcEngine(lake=lake)
-    engine.bootstrap(empty_snap, as_of_lsn=10)
-    engine.apply_epochs(tail)
-    assert _state(lake) == {("L", 0): ("user", "fresh row")}
+    for crash in (False, True):
+        root = str(tmp_path / f"lake-{crash}")
+        engine = CdcEngine(lake=ParquetLakeTable(spark, root, n_buckets=4))
+        if crash:
+            publish = engine.lake._publish
+
+            def publish_then_crash(commit, side_write=None):
+                publish(commit, side_write)
+                raise RuntimeError("driver died after publish")
+
+            engine.lake._publish = publish_then_crash
+            with pytest.raises(RuntimeError, match="driver died"):
+                engine.bootstrap(empty_snap, as_of_lsn=10)
+            engine = CdcEngine(lake=ParquetLakeTable(spark, root))
+        else:
+            engine.bootstrap(empty_snap, as_of_lsn=10)
+        engine.apply_epochs(tail)
+        assert _state(engine.lake) == {("L", 0): ("user", "fresh row")}
 
 
 def test_restarted_engine_adopts_persisted_cutover(spark, tmp_path):
@@ -87,7 +102,7 @@ def test_restarted_engine_adopts_persisted_cutover(spark, tmp_path):
     engine.bootstrap(snap, as_of_lsn=100)
 
     # a NEW engine object on the same root (restart) must still drop
-    # pre-cutover events — the cutover comes from table props, not memory
+    # pre-cutover events — the cutover comes from the manifest, not memory
     engine2 = CdcEngine(lake=ParquetLakeTable(spark, root))
     stale = spark.createDataFrame(
         [(50, "U", 7, "A", 0, "user", "stale overwrite", None, None)], EVENT_COLS

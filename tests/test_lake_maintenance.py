@@ -222,20 +222,28 @@ def test_fsck_classifies_and_repairs_crash_debris(spark, lake3):
     # in-flight: seq beyond the ledger head — an unpublished writer
     inflight = os.path.join(lake3.root, "data", "c00000099")
     os.makedirs(inflight)
-    # interrupted publish dropping
-    tmp = os.path.join(lake3.root, "_commits", ".tmp-deadwriter")
-    open(tmp, "w").write("{}")
+    # interrupted atomic-write droppings: a manifest, a schema file and
+    # _table.json each publish through a .tmp- file next to their target
+    tmps = [
+        os.path.join(lake3.root, "_commits", ".tmp-deadwriter"),
+        os.path.join(lake3.root, "_schema", ".tmp-deadschema"),
+        os.path.join(lake3.root, ".tmp-deadprops"),
+    ]
+    for tmp in tmps:
+        open(tmp, "w").write("{}")
 
     rep = lake3.fsck()
     assert rep["ok"]  # debris is not corruption
     assert rep["dead_orphan_dirs"] == ["c00000000"]
     assert rep["inflight_dirs"] == ["c00000099"]
-    assert rep["tmp_manifests"] == [".tmp-deadwriter"]
+    debris = [".tmp-deadprops", "_commits/.tmp-deadwriter", "_schema/.tmp-deadschema"]
+    assert rep["tmp_files"] == debris
     assert rep["removed"] == []  # report-only by default
 
     rep = lake3.fsck(repair=True)
-    assert sorted(rep["removed"]) == ["_commits/.tmp-deadwriter", "data/c00000000"]
-    assert not os.path.exists(dead2) and not os.path.exists(tmp)
+    assert sorted(rep["removed"]) == sorted(debris + ["data/c00000000"])
+    assert not os.path.exists(dead2)
+    assert not any(os.path.exists(tmp) for tmp in tmps)
     assert os.path.exists(inflight)  # never touch a possibly-live writer
     assert {tuple(r) for r in lake3.read().collect()} == before
     assert lake3.committed_epochs() == {0, 1, 2}

@@ -1,18 +1,19 @@
-"""Persisted table properties and bucket-layout evolution (``rebucket``).
+"""Persisted table layout and bucket-layout evolution (``rebucket``).
 
 The bucket layout is TABLE metadata, not reader code (Iceberg keeps the
-partition spec in table metadata for the same reason): re-opening a root
-with different constructor args must adopt the stored layout, otherwise a
-key's new rows route to a different bucket than its history and the
-per-bucket merge silently duplicates the key. ``rebucket(n)`` is the
-sanctioned way to change the layout — one maintenance commit, ledger and
-state untouched.
+partition spec in snapshot metadata for the same reason): every commit
+manifest carries its ``n_buckets``, and re-opening a root with different
+constructor args must adopt it, otherwise a key's new rows route to a
+different bucket than its history and the per-bucket merge silently
+duplicates the key. ``rebucket(n)`` is the sanctioned way to change the
+layout — one maintenance commit, ledger and state untouched.
 """
 
 from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from nifi_nlp_processor_spark.lake import ParquetLakeTable
@@ -91,14 +92,46 @@ def test_rebucket_preserves_state_and_ledger(spark, tmp_path):
         "conv_id", "turn_idx", "text", "_lsn", "_deleted"
     )
     assert {tuple(r) for r in old.collect()} == before
+    # ... and recovers each row's bucket under that snapshot's own count
+    old_b = lake.read_raw(at_seq=pre_seq).select(
+        (F.col("_b") == F.pmod(F.xxhash64("conv_id"), F.lit(4))).alias("ok")
+    )
+    assert all(r.ok for r in old_b.collect())
 
     # merges after the rebucket route under the new layout (fresh handle
-    # adopts it from _table.json)
+    # adopts it from the head manifest)
     lake2 = ParquetLakeTable(spark, str(tmp_path / "l"))
     assert lake2.n_buckets == 16
     lake2.merge_into(_events(spark, [("c7", 0, 9999, "U", "c7-fixed")]), epoch_id=1)
     rows = lake2.read().where("conv_id = 'c7' AND turn_idx = 0").collect()
     assert [(r.text,) for r in rows] == [("c7-fixed",)]
+
+
+def test_crash_after_rebucket_publish_keeps_one_row_per_key(spark, tmp_path):
+    # the driver dies right after the rebucket's manifest lands: the new
+    # bucket count must already be durable, or a reopened handle routes
+    # keys by the old count against the new layout's data
+    root = str(tmp_path / "l")
+    lake = ParquetLakeTable(spark, root, n_buckets=4)
+    lake.merge_into(_events(spark, SEED), epoch_id=0)
+    publish = lake._publish
+
+    def publish_then_crash(commit, side_write=None):
+        publish(commit, side_write)
+        raise RuntimeError("driver died after publish")
+
+    lake._publish = publish_then_crash
+    with pytest.raises(RuntimeError, match="driver died"):
+        lake.rebucket(16)
+
+    reopened = ParquetLakeTable(spark, root)
+    reopened.merge_into(_events(spark, [("c7", 0, 9999, "U", "c7-fixed")]), epoch_id=1)
+    keys = [(r.conv_id, r.turn_idx) for r in reopened.read().collect()]
+    assert len(keys) == len(set(keys)) == len(SEED)
+    rows = reopened.read().where("conv_id = 'c7' AND turn_idx = 0").collect()
+    assert [(r.text,) for r in rows] == [("c7-fixed",)]
+    assert reopened.n_buckets == 16
+    assert reopened.fsck()["ok"]
 
 
 def test_rebucket_folds_mor_deltas(spark, tmp_path):

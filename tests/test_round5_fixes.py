@@ -63,7 +63,7 @@ def test_merge_rejects_probe_missing_written_bucket(spark, tmp_path):
     assert 1 in lake.committed_epochs()
 
 
-def test_schema_files_published_atomically(spark, tmp_path):
+def test_schema_files_published_atomically(spark, tmp_path, monkeypatch):
     lake = ParquetLakeTable(spark, str(tmp_path / "s"), n_buckets=4)
     e0 = _events(spark, 0)
     lake.merge_into(e0, 0)
@@ -72,12 +72,32 @@ def test_schema_files_published_atomically(spark, tmp_path):
     lake.merge_into(e1, 1)
     d = os.path.join(lake.root, "_schema")
     names = sorted(os.listdir(d))
-    assert names == ["v0001.json", "v0002.json"]  # no .tmp-schema- residue
+    assert names == ["v0001.json", "v0002.json"]  # no .tmp- residue
     import json
+    import stat
 
     for n in names:
         with open(os.path.join(d, n)) as fh:
             json.load(fh)  # complete, parseable
+    # every atomically published JSON file is world-readable (mkstemp
+    # creates 0600)
+    published = [os.path.join(d, n) for n in names] + [
+        os.path.join(lake.root, "_table.json"),
+        os.path.join(lake.root, "_commits", "commit-00000002.json"),
+    ]
+    assert {stat.S_IMODE(os.stat(p).st_mode) for p in published} == {0o644}
+
+    # a write that fails mid-file leaves neither its target nor a tmp file
+    def broken_dump(obj, fh):
+        fh.write("{")
+        raise OSError("disk full")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(json, "dump", broken_dump)
+        with pytest.raises(OSError, match="disk full"):
+            lake._write_schema(lake.current_schema(), 3)
+    assert sorted(os.listdir(d)) == names
+    assert lake.fsck()["tmp_files"] == []
 
 
 def test_interval_join_rejects_uncovered_join_types(spark):
