@@ -19,15 +19,21 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   touched buckets and their new LSN watermarks come from the written
   files' directories and parquet footers. Reads fold base+deltas through
   the same LWW expressions the CoW merge uses (``lww_payload_order`` — one
-  definition, so staged folds provably agree with single-pass merges), and
-  ``compact()`` folds deltas back into one base file per bucket. CoW is
-  read-optimal, MoR is write-optimal; mix freely per epoch.
+  definition, so staged folds provably agree with single-pass merges). A
+  delta write given a chain bound (``max_deltas=k``, the runner's
+  ``auto_compact_deltas``) folds every bucket whose chain it would bring
+  to k inside the same write: those buckets' base and deltas join the
+  batch's LWW resolution and come out as one new base, so no chain ever
+  reaches k and the fold is no second job or commit. ``compact()`` is the
+  manual form: it folds every delta chain back into one base file per
+  bucket in a maintenance commit. CoW is read-optimal, MoR is
+  write-optimal; mix freely per epoch.
 * **Atomic snapshot commits** — merge, compact and rebucket share one
   commit writer (``_commit``): it writes data files under a fresh commit
-  directory, then publishes a JSON manifest via atomic ``rename``. The
-  manifest is the commit point: readers only see renamed manifests, and
-  orphaned data files from a crashed merge are invisible (Iceberg snapshot
-  semantics). A manifest carries everything a reader or the next writer
+  directory, then publishes a JSON manifest via an atomic hard link that
+  never replaces a published one. The manifest is the commit point:
+  readers only see published manifests, and orphaned data files from a
+  crashed merge are invisible (Iceberg snapshot semantics). A manifest carries everything a reader or the next writer
   needs: ``seq``, ``epoch_id`` (``null`` for maintenance), the schema
   file and version, one pointer per bucket (path, schema, rows, optional
   column stats, MoR deltas), per-bucket LSN watermarks, metrics, and the
@@ -87,8 +93,11 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   tie-breaks included — are bit-identical (asserted in tests).
 
 Single-writer assumption: one runner commits at a time (the driver of the
-streaming query). Concurrent writers would need the optimistic-retry loop
-Iceberg provides; out of scope here.
+streaming query). A second writer that read the ledger before a commit it
+races gets ``CommitConflictError`` (retryable: the retry re-reads the
+ledger) and never replaces or empties a published commit. Two writers
+whose data writes overlap in time still share the seq-named commit dir;
+the full optimistic-retry loop Iceberg provides is out of scope here.
 """
 
 from __future__ import annotations
@@ -209,20 +218,32 @@ def _full_schema(schema: T.StructType) -> T.StructType:
     )
 
 
-def _write_json(path: str, obj) -> None:
-    """Publish ``obj`` at ``path`` atomically (mkstemp + rename, mode 0644):
-    a reader sees the whole file or none of it. Manifests, schema files and
+class CommitConflictError(RuntimeError):
+    """Another writer published the commit seq this one was about to take.
+    Nothing of this attempt is visible; retrying re-reads the ledger (an
+    epoch the other writer already committed is then skipped)."""
+
+
+def _write_json(path: str, obj, replace: bool = True) -> None:
+    """Publish ``obj`` at ``path`` atomically (mkstemp, mode 0644): a
+    reader sees the whole file or none of it. Manifests, schema files and
     ``_table.json`` all go through here; a failed write removes its tmp
-    file (``fsck`` lists any a killed process left)."""
+    file (``fsck`` lists any a killed process left). ``replace=False``
+    publishes by hard link, which raises ``FileExistsError`` instead of
+    replacing an existing ``path`` (a manifest is never rewritten)."""
     fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".tmp-")
     try:
         with os.fdopen(fd, "w") as fh:
             json.dump(obj, fh)
         os.chmod(tmp, 0o644)
-        os.rename(tmp, path)
+        if replace:
+            os.rename(tmp, path)
+            return
+        os.link(tmp, path)
     except BaseException:
         os.unlink(tmp)
         raise
+    os.unlink(tmp)
 
 
 def align(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -250,7 +271,9 @@ class MergeMetrics:
     inserted: int = 0
     deleted: int = 0
     stale: int = 0  # source rows that lost LWW to an existing higher LSN
-    buckets_touched: int = 0
+    buckets_touched: int = 0  # buckets the commit wrote, folded ones included
+    # MoR buckets whose delta chain the merge folded into a new base
+    buckets_folded: int = 0
     lsn_watermarks: dict[str, int] = field(default_factory=dict)
     wall_sec: float = 0.0
     probe_sec: float = 0.0  # staging scan + touched-bucket/watermark probe
@@ -585,7 +608,10 @@ class ParquetLakeTable:
         return report
 
     def compact(self, min_files: int = 2) -> dict:
-        """Iceberg ``rewrite_data_files`` (bin-pack compaction) analogue.
+        """Iceberg ``rewrite_data_files`` (bin-pack compaction) analogue —
+        the manual maintenance call. (A MoR engine with a chain bound needs
+        no call: its delta writes fold a full chain themselves, see
+        ``merge_into(max_deltas=...)``.)
 
         Copy-on-write at bucket granularity accretes one file set per
         touched epoch ONLY until the next merge rewrites the bucket — but a
@@ -741,6 +767,10 @@ class ParquetLakeTable:
         carried forward from ``prev``. Publishes the commit (``side_write``
         awaited first) and returns it."""
         seq = prev["seq"] + 1 if prev else 1
+        if os.path.exists(self._manifest_path(seq)):
+            # a writer that read the ledger before another one published
+            # this seq: fail before touching that commit's data dir
+            raise CommitConflictError(f"commit seq {seq} was published by another writer")
         parts: dict[int, dict] = {}
         footers: dict[int, tuple[int, int | None]] = {}
         if df is not None:
@@ -783,15 +813,26 @@ class ParquetLakeTable:
         shutil.rmtree(abs_dir, ignore_errors=True)
         return commit_dir, abs_dir
 
+    def _manifest_path(self, seq: int) -> str:
+        return os.path.join(self.root, "_commits", f"commit-{seq:08d}.json")
+
     def _publish(self, commit: dict, side_write: Future | None = None) -> None:
-        """Atomic commit point: tmp write + rename. ``side_write``: a
-        concurrent write the commit depends on (the runner's DLQ append);
-        it is awaited first, and its failure leaves the commit unpublished."""
+        """Atomic commit point: tmp write + hard link, which never replaces
+        a published manifest — a writer racing another for the same seq
+        gets ``CommitConflictError`` instead of silently dropping the
+        other's commit. ``side_write``: a concurrent write the commit
+        depends on (the runner's DLQ write); it is awaited first, and its
+        failure leaves the commit unpublished."""
         if side_write is not None:
             side_write.result()
-        fname = f"commit-{commit['seq']:08d}.json"
-        _write_json(os.path.join(self.root, "_commits", fname), commit)
-        self._head = fname
+        path = self._manifest_path(commit["seq"])
+        try:
+            _write_json(path, commit, replace=False)
+        except FileExistsError:
+            raise CommitConflictError(
+                f"commit seq {commit['seq']} was published by another writer"
+            ) from None
+        self._head = os.path.basename(path)
 
     # ---- schema -----------------------------------------------------
 
@@ -1266,6 +1307,7 @@ class ParquetLakeTable:
         lww: str = "window",
         probe: dict[int, tuple[int, int]] | None = None,
         side_write: Future | None = None,
+        max_deltas: int | None = None,
     ) -> MergeMetrics:
         """MERGE src (one epoch's change events, may contain intra-batch
         duplicates) into the table under max-LSN LWW. Idempotent per epoch.
@@ -1287,9 +1329,22 @@ class ParquetLakeTable:
         MoR delta write ignores both arguments.
 
         ``side_write``: a concurrent write this commit depends on (the
-        runner's DLQ append). It is awaited just before the commit point,
+        runner's DLQ write). It is awaited just before the commit point,
         so a published commit implies it is durable; if it failed, its
         exception propagates and the epoch stays uncommitted.
+
+        ``max_deltas``: the delta-chain bound k of a MoR delta write (the
+        runner passes ``auto_compact_deltas``; ``None``: chains grow until
+        ``compact()``). Every bucket whose non-empty chain holds at least
+        k−1 deltas — the ones this epoch could bring to k — is folded in
+        this same write: its base and deltas join the batch's LWW
+        resolution in the (bucket, salt) window, exactly as a CoW merge
+        reads its touched buckets, and it is written as a new base pointer
+        instead of a delta append. The buckets come from the manifest, so
+        the write still runs no probe; an untouched one folds too, so no
+        published chain reaches k (k ≥ 2), and its watermark stays put
+        (every stored winner's LSN is at most the previous watermark).
+        ``MergeMetrics.buckets_folded`` counts them. A CoW merge ignores it.
 
         ``mode``:
 
@@ -1311,8 +1366,9 @@ class ParquetLakeTable:
           touched bucket is one file, a bucket the manifest sizes past
           ``ROWS_PER_WRITE_TASK`` rows at most its salt's worth (see the
           module docstring). Readers fold base+deltas with the
-          same LWW expressions (``_read_manifest_buckets``), and
-          ``compact()`` folds deltas back into one base file per bucket.
+          same LWW expressions (``_read_manifest_buckets``); ``max_deltas``
+          (below) or ``compact()`` folds deltas back into one base per
+          bucket.
           Because the target is unread, per-epoch updated/inserted/
           deleted/stale conflict counts are unknowable at write time and
           reported as -1 (Iceberg MoR has the same limitation); the
@@ -1334,6 +1390,8 @@ class ParquetLakeTable:
             raise ValueError(f"unknown merge mode {mode!r} (use 'cow' or 'mor')")
         if lww not in ("window", "agg"):
             raise ValueError(f"unknown lww strategy {lww!r} (use 'window' or 'agg')")
+        if max_deltas is not None and max_deltas < 1:
+            raise ValueError("max_deltas must be >= 1")
         t0 = time.time()
         if epoch_id in self.committed_epochs():
             return MergeMetrics(epoch_id=epoch_id, skipped=True)
@@ -1392,28 +1450,41 @@ class ParquetLakeTable:
             }, side_write)
             return MergeMetrics(**commit["metrics"])
 
+        # The target buckets the merge reads and rewrites whole: a CoW
+        # merge's touched buckets, or the buckets a delta write folds — those
+        # whose non-empty chain this epoch would bring to ``max_deltas``
+        # (taken from the manifest, so the delta write still runs no probe;
+        # an untouched one folds too, so no chain ever reaches the bound).
+        if not mor_delta:
+            tgt = [str(b) for b in sorted(probe)] if prev else []
+        elif max_deltas is None:
+            tgt = []
+        else:
+            tgt = [
+                b for b, ptr in sorted(prev["buckets"].items())
+                if len(ptr.get("deltas", [])) >= max(1, max_deltas - 1)
+            ]
         full = _full_schema(schema)
         tgt_parts = []
-        if not mor_delta and prev:
-            by_schema: dict[str, list[str]] = {}
-            for b in sorted(probe):
-                ptr = prev["buckets"].get(str(b))
-                if ptr:
-                    # every part: base + any merge-on-read deltas — the LWW
-                    # aggregation below resolves them and the rewrite
-                    # retires the delta pointers for the touched buckets
-                    for part in self._ptr_parts(ptr):
-                        by_schema.setdefault(part["schema"], []).append(
-                            os.path.join(self.root, part["path"])
-                        )
-            for sname, paths in by_schema.items():
-                # explicit schema: the merge's target read otherwise pays a
-                # footer schema-inference pass per epoch (driver-side, scales
-                # with touched buckets × salt files — pure fixed cost)
-                df = self.spark.read.schema(self._file_schema(sname)).parquet(*paths)
-                tgt_parts.append(
-                    align(df, full).withColumn(BUCKET_COL, self._bucket_expr(n))
-                )
+        by_schema: dict[str, list[str]] = {}
+        for b in tgt:
+            ptr = prev["buckets"].get(b)
+            if ptr:
+                # every part: base + any merge-on-read deltas — the LWW
+                # resolution below folds them into the batch and the
+                # rewrite retires the bucket's delta pointers
+                for part in self._ptr_parts(ptr):
+                    by_schema.setdefault(part["schema"], []).append(
+                        os.path.join(self.root, part["path"])
+                    )
+        for sname, paths in by_schema.items():
+            # explicit schema: the merge's target read otherwise pays a
+            # footer schema-inference pass per epoch (driver-side, scales
+            # with touched buckets × salt files — pure fixed cost)
+            df = self.spark.read.schema(self._file_schema(sname)).parquet(*paths)
+            tgt_parts.append(
+                align(df, full).withColumn(BUCKET_COL, self._bucket_expr(n))
+            )
 
         src_tagged = src_rows.withColumn("_src", F.lit(True))
         merged = src_tagged
@@ -1524,7 +1595,9 @@ class ParquetLakeTable:
         obs = Observation(f"merge-{epoch_id}")
         if mor_delta:
             # target unread → conflict classification impossible at write
-            # time; observe only the delta cardinality (metrics report -1)
+            # time; observe only the rows written — a folded bucket's whole
+            # rewrite included, as a CoW merge counts its touched buckets
+            # (metrics report -1)
             out = out.observe(obs, F.count(F.lit(1)).alias("rows_applied"))
         else:
             src_won = F.col("_src_lsn").isNotNull() & (
@@ -1600,16 +1673,19 @@ class ParquetLakeTable:
                 watermarks[str(b)] = max(int(hi), int(cur)) if cur is not None else int(hi)
 
             buckets = dict(prev["buckets"]) if prev else {}
+            folded = set(parts) & {int(b) for b in tgt} if mor_delta else set()
             for b, part in parts.items():
-                if mor_delta and str(b) in buckets:
+                if mor_delta and str(b) in buckets and b not in folded:
                     # append a delta file set; the base pointer (and any
-                    # earlier deltas) stay — readers fold, compact() retires
+                    # earlier deltas) stay — readers fold, a later fold or
+                    # compact() retires them
                     ptr = dict(buckets[str(b)])
                     ptr["deltas"] = list(ptr.get("deltas", [])) + [part]
                     buckets[str(b)] = ptr
                 else:
-                    # CoW rewrite, or first data for this bucket (a fold of
-                    # the batch alone IS the merged state when there is no base)
+                    # a rewrite of a read bucket, or first data for this
+                    # bucket (a fold of the batch alone IS the merged state
+                    # when there is no base)
                     buckets[str(b)] = part
 
             m = obs.get
@@ -1624,6 +1700,7 @@ class ParquetLakeTable:
                 deleted=int(m["deleted"] or 0) if not mor_delta else -1,
                 stale=int(m["stale"] or 0) if not mor_delta else -1,
                 buckets_touched=len(parts),
+                buckets_folded=len(folded),
                 lsn_watermarks={str(b): watermarks[str(b)] for b in parts},
                 wall_sec=time.time() - t0,
                 probe_sec=round(t_probe, 3),

@@ -3044,16 +3044,16 @@ SELECT 'left_outer' AS variant, * FROM ({_STREAM_INTERVAL_JOIN_OUTER_SQL})
 def q_cdc_mor_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read ingest with the INLINE auto-compaction policy active
     (runner.CdcEngine ``auto_compact_deltas``): each epoch appends
-    per-bucket delta file sets; as soon as any bucket's delta chain reaches
-    the threshold, the engine folds the chain with ``compact()`` in the
-    same loop — no external maintenance scheduler, the Iceberg
+    per-bucket delta file sets, and the epoch that would bring a bucket's
+    chain to the threshold folds that chain into a new base inside its own
+    write and commit (``merge_into(max_deltas=...)``) — no external
+    maintenance scheduler and no second job, the Iceberg
     min-count-to-merge analogue. With threshold 2 over 4 epochs the policy
-    fires mid-stream (asserted: at least one epoch records a compaction),
-    and the oracle is the SAME global sequential LWW as ``cdc_apply_e2e``
-    — equality proves policy-triggered compaction preserves state
-    bit-for-bit while bounding read amplification
-    (tests/test_lake_mor.py::test_auto_compaction_bounds_delta_chains pins
-    the chain-length bound itself)."""
+    fires mid-stream (asserted: at least one epoch records a fold), and the
+    oracle is the SAME global sequential LWW as ``cdc_apply_e2e`` —
+    equality proves the in-write fold preserves state bit-for-bit while
+    bounding read amplification (tests/test_inline_fold.py pins the
+    chain-length bound itself)."""
     root = _scratch_root(spark, sf_dir, "cdc_mac")
     staged = _staged_changes(spark, sf_dir)
     lake = ParquetLakeTable(spark, root, n_buckets=16)

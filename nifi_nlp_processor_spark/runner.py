@@ -4,7 +4,7 @@ The engine's hot path (SURVEY §4.3):
 
     change events (epoch)
       → validity split (dead-letter quarantine, never fail the batch; the
-        DLQ append runs on its own thread beside the merge)
+        DLQ write runs on its own thread beside the merge)
       → optional vectorized enrichment (mapInPandas, Arrow batches)
       → LWW dedupe (partial+final agg — skew-safe)
       → LakeTable.merge_into (bucket copy-on-write, atomic manifest)
@@ -23,6 +23,7 @@ test, two delivery mechanisms.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 from collections.abc import Callable
@@ -32,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from nifi_nlp_processor_spark.lake import MergeMetrics, ParquetLakeTable
@@ -43,7 +45,8 @@ class EpochResult:
     epoch_id: int
     merge: MergeMetrics
     quarantined: int = 0
-    # set when this epoch tripped the auto-compaction threshold
+    # ``{"buckets_compacted": n}`` when this epoch's MoR write folded n full
+    # delta chains (``CdcEngine.auto_compact_deltas``), else None
     compacted: dict | None = None
 
 
@@ -62,14 +65,15 @@ class CdcEngine:
     # (see lake module docstring for the trade-off)
     lww_strategy: str = "window"
     # MoR deltas accumulate until compaction and the read-time fold scans
-    # every delta in a bucket's chain; with a threshold set, the engine
-    # compacts as soon as any bucket's chain reaches it, so read cost stays
-    # bounded without an external maintenance scheduler (Iceberg analogue:
-    # commit.manifest.min-count-to-merge-style inline maintenance).
-    # None = manual compaction only.
+    # every delta in a bucket's chain; with a threshold k set, no bucket's
+    # chain reaches k: the epoch that would fill a chain folds it into a
+    # new base in the same write and commit (lake.merge_into max_deltas),
+    # so read cost stays bounded without an external maintenance scheduler
+    # or a second job (Iceberg analogue: commit.manifest.min-count-to-merge-
+    # style inline maintenance). None = manual compaction only.
     auto_compact_deltas: int | None = None
     results: list[EpochResult] = field(default_factory=list)
-    # the one long-lived thread DLQ appends run on, beside the merge
+    # the one long-lived thread DLQ writes run on, beside the merge
     _dlq_pool: ThreadPoolExecutor | None = field(default=None, init=False, repr=False)
 
     def apply_epoch(
@@ -84,12 +88,14 @@ class CdcEngine:
         skips the inline probe job of a merge that probes (see
         ``lake.merge_into``).
 
-        Critical path: the DLQ append is submitted to the engine's DLQ
+        Critical path: the DLQ write is submitted to the engine's DLQ
         thread and runs beside the merge; ``merge_into`` waits for it just
         before publishing, so a published commit still implies its rejects
         are durable, and a failed DLQ write leaves the epoch uncommitted.
         ``EpochResult.quarantined`` is the exact reject count, observed on
-        the DLQ write itself."""
+        the DLQ write itself. A MoR epoch that would fill a delta chain
+        folds it in the same write (``auto_compact_deltas``): one job, one
+        commit."""
         if epoch_id in self.lake.committed_epochs():
             res = EpochResult(epoch_id=epoch_id, merge=MergeMetrics(epoch_id=epoch_id, skipped=True))
             self.results.append(res)
@@ -98,7 +104,7 @@ class CdcEngine:
         valid, bad = self._split(batch)
         dlq = None
         if self.quarantine_dir is not None:
-            # DLQ append (REL_FAILURE analogue) beside the merge
+            # DLQ write (REL_FAILURE analogue) beside the merge
             dlq = self._submit_dlq(bad.withColumn("_epoch_id", F.lit(epoch_id)))
 
         # Probe the post-quarantine, PRE-enrichment frame: the probe still
@@ -123,6 +129,7 @@ class CdcEngine:
             metrics = self.lake.merge_into(
                 valid, epoch_id, probe_src=probe_src, mode=self.merge_mode,
                 lww=self.lww_strategy, probe=probe, side_write=dlq,
+                max_deltas=self.auto_compact_deltas,
             )
         finally:
             if dlq is not None:
@@ -132,14 +139,8 @@ class CdcEngine:
         res = EpochResult(
             epoch_id=epoch_id, merge=metrics,
             quarantined=dlq.result() if dlq is not None else 0,
+            compacted={"buckets_compacted": metrics.buckets_folded} if metrics.buckets_folded else None,
         )
-        if self.auto_compact_deltas is not None and not metrics.skipped:
-            ptrs = self.lake.last_commit()["buckets"]
-            if any(
-                len(p.get("deltas", [])) >= self.auto_compact_deltas
-                for p in ptrs.values()
-            ):
-                res.compacted = self.lake.compact()
         self.results.append(res)
         return res
 
@@ -162,22 +163,27 @@ class CdcEngine:
         return valid, bad
 
     def _submit_dlq(self, bad: DataFrame) -> Future:
-        """Append ``bad`` to the DLQ on the engine's one DLQ thread; the
-        future's result is the exact row count, observed on the write (no
-        extra job). The task is wrapped where it is submitted, so its Spark
-        job runs under the caller's job group and local properties."""
+        """Write ``bad`` (tagged with its ``_epoch_id``) to the DLQ on the
+        engine's one DLQ thread; the future's result is the exact row
+        count, observed on the write (no extra job). Each epoch's rejects
+        are one ``_epoch_id=`` partition, replaced whole by a dynamic
+        partition overwrite, so a retried epoch writes them once, not
+        twice. The task is wrapped where it is submitted, so its Spark job
+        runs under the caller's job group and local properties."""
         if self._dlq_pool is None:
             self._dlq_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="dlq")
         quarantine_dir = self.quarantine_dir
 
-        def _append() -> int:
+        def _write() -> int:
             obs = Observation()
-            bad.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "append"
-            ).parquet(quarantine_dir)
+            bad.observe(obs, F.count(F.lit(1)).alias("n")).write.partitionBy(
+                "_epoch_id"
+            ).mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(
+                quarantine_dir
+            )
             return int(obs.get["n"])
 
-        return self._dlq_pool.submit(inheritable_thread_target(self.lake.spark)(_append))
+        return self._dlq_pool.submit(inheritable_thread_target(self.lake.spark)(_write))
 
     def bootstrap(
         self, snapshot: DataFrame, as_of_lsn: int, epoch_id: int = -1
@@ -236,16 +242,23 @@ class CdcEngine:
         was meanwhile updated by a higher LSN correctly loses LWW; rows
         the fix did not actually repair re-quarantine (the batch still
         commits); re-running the same repair epoch is a structural no-op
-        (the ledger skips committed epochs). The DLQ itself is an
-        append-only log — reprocessed rows stay in it as history, keyed by
-        the ``_epoch_id`` that rejected them."""
+        (the ledger skips committed epochs). The DLQ itself is a log with
+        one partition per rejecting epoch — reprocessed rows stay in it as
+        history, keyed by the ``_epoch_id`` that rejected them."""
         if self.quarantine_dir is None:
             raise ValueError("engine has no quarantine_dir")
-        bad = self.lake.spark.read.parquet(self.quarantine_dir)
-        if from_epochs is not None:
-            bad = bad.where(F.col("_epoch_id").isin([int(e) for e in from_epochs]))
-        fixed = fix(bad.drop("_reject_reason", "_epoch_id"))
-        return self.apply_epoch(fixed, new_epoch_id)
+        schema = self.lake.current_schema()
+        if schema is not None and not glob.glob(os.path.join(self.quarantine_dir, "_epoch_id=*")):
+            # no epoch has rejected a row, so no DLQ file holds a schema to
+            # read: reprocess an empty batch of the table's columns
+            extra = [T.StructField("lsn", T.LongType()), T.StructField("op", T.StringType())]
+            bad = self.lake.spark.createDataFrame([], T.StructType(schema.fields + extra))
+        else:
+            bad = self.lake.spark.read.parquet(self.quarantine_dir)
+            if from_epochs is not None:
+                bad = bad.where(F.col("_epoch_id").isin([int(e) for e in from_epochs]))
+            bad = bad.drop("_reject_reason", "_epoch_id")
+        return self.apply_epoch(fix(bad), new_epoch_id)
 
     def _prefetch_probe(self, batch: DataFrame) -> dict[int, tuple[int, int]] | None:
         """The touched-bucket/watermark probe over the SAME rows

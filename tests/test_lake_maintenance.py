@@ -303,3 +303,42 @@ def test_tag_head_default_move_and_reopen(spark, lake3):
         reopened.read_tag("nope")
     with _pt.raises(ValueError):
         reopened.tag("bad", seq=99)
+
+
+@pytest.mark.parametrize("race_at", ["_commit", "_publish"])
+def test_racing_writer_cannot_replace_a_published_commit(spark, tmp_path, monkeypatch, race_at):
+    """Two handles on one root both read seq 1; handle A publishes seq 2
+    while B is about to write its data (``_commit``) or has written it and
+    is about to publish (``_publish``). B must get a retryable conflict and
+    leave A's commit — manifest and data — as A published it."""
+    from nifi_nlp_processor_spark.lake import CommitConflictError
+
+    root = str(tmp_path / "race")
+    a = ParquetLakeTable(spark, root, n_buckets=4)
+    b = ParquetLakeTable(spark, root)
+    e0 = [(f"c{i}", 0, 10 + i, "v0", 0) for i in range(12)]
+    e1 = [(f"c{i}", 0, 100 + i, "a", 1) for i in range(12)]
+    e2 = [(f"c{i}", 1, 200 + i, "b", 2) for i in range(12)]
+    a.merge_into(_events(spark, e0), 0)
+
+    orig = getattr(ParquetLakeTable, race_at)
+    raced = []
+
+    def racing(self, *args, **kw):
+        if self is b and not raced:
+            raced.append(a.merge_into(_events(spark, e1), 1))
+        return orig(self, *args, **kw)
+
+    monkeypatch.setattr(ParquetLakeTable, race_at, racing)
+    with pytest.raises(CommitConflictError):
+        b.merge_into(_events(spark, e2), 2)
+    assert raced
+    fresh = ParquetLakeTable(spark, root)
+    assert fresh.committed_epochs() == {0, 1}
+    texts = {(r.conv_id, r.turn_idx): r.text for r in fresh.read().collect()}
+    assert texts == {(f"c{i}", 0): "a" for i in range(12)}
+    assert fresh.fsck()["ok"]
+    # the retry re-reads the ledger and lands on top of A's commit
+    b.merge_into(_events(spark, e2), 2)
+    assert [c["epoch_id"] for c in fresh.commit_history()] == [0, 1, 2]
+    assert len(fresh.read().collect()) == 24

@@ -241,7 +241,7 @@ def test_auto_compaction_bounds_delta_chains(spark, tmp_path):
     assert any(r.compacted for r in engine.results)
     rows = lake.read().collect()
     assert [(r.conv_id, r.turn_idx, r.text) for r in rows] == [("hot", 0, "v4")]
-    # exactly-once ledger intact through the interleaved maintenance commits
+    # exactly-once ledger intact through the epochs that folded a chain
     assert lake.committed_epochs() == {0, 1, 2, 3, 4}
 
 

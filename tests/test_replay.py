@@ -179,6 +179,63 @@ def test_grouped_probe_skips_committed_epochs(spark, tmp_path, monkeypatch):
     events.unpersist()
 
 
+def test_retried_epoch_writes_its_rejects_once(spark, tmp_path, monkeypatch):
+    """An epoch whose commit fails after its DLQ write ran is re-run: the
+    DLQ holds its rejects once, not once per attempt."""
+    import pyspark.sql.functions as F
+
+    df = spark.createDataFrame(
+        [
+            {"conv_id": f"c{i}", "turn_idx": 0, "lsn": i + 1, "op": "U",
+             "text": None if i % 3 == 0 else f"t{i}", "role": "user",
+             "tool": None, "epoch_id": 0}
+            for i in range(12)
+        ],
+        "conv_id string, turn_idx int, lsn long, op string, text string, "
+        "role string, tool string, epoch_id long",
+    )
+    dlq = str(tmp_path / "dlq")
+    lake = ParquetLakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    engine = CdcEngine(lake=lake, quarantine_dir=dlq)
+    orig = ParquetLakeTable._publish
+    failed = []
+
+    def flaky(self, commit, side_write=None):
+        if not failed:
+            failed.append(commit["seq"])
+            side_write.result()  # the DLQ write has landed
+            raise OSError("publish failed")
+        return orig(self, commit, side_write)
+
+    monkeypatch.setattr(ParquetLakeTable, "_publish", flaky)
+    with pytest.raises(OSError, match="publish failed"):
+        engine.apply_epoch(df, 0)
+    assert spark.read.parquet(dlq).count() == 4
+    res = engine.apply_epoch(df, 0)
+    assert lake.committed_epochs() == {0}
+    assert res.quarantined == 4 == spark.read.parquet(dlq).count()
+    assert {r[0] for r in spark.read.parquet(dlq).select("_epoch_id").distinct().collect()} == {0}
+    assert df.where(F.col("text").isNotNull()).count() == lake.read().count()
+
+
+def test_reprocess_of_a_dlq_without_rejects_applies_an_empty_epoch(spark, tmp_path):
+    """No epoch rejected a row, so the DLQ holds no partition: a repair
+    pass still runs, as one empty epoch."""
+    df = spark.createDataFrame(
+        [{"conv_id": "a", "turn_idx": 0, "lsn": 1, "op": "U", "text": "ok",
+          "role": "user", "tool": None, "epoch_id": 0}],
+        "conv_id string, turn_idx int, lsn long, op string, text string, "
+        "role string, tool string, epoch_id long",
+    )
+    lake = ParquetLakeTable(spark, str(tmp_path / "lake"), n_buckets=4)
+    engine = CdcEngine(lake=lake, quarantine_dir=str(tmp_path / "dlq"))
+    assert engine.apply_epoch(df, 0).quarantined == 0
+    res = engine.reprocess_quarantine(lambda bad: bad, new_epoch_id=1)
+    assert res.merge.rows_applied == 0 and res.quarantined == 0
+    assert lake.committed_epochs() == {0, 1}
+    assert [tuple(r) for r in lake.read().select("conv_id", "text").collect()] == [("a", "ok")]
+
+
 def test_quarantine_reprocess(spark, tmp_path):
     """DLQ repair loop: null-text rows quarantine in epoch 0; a fix
     restores their text and reapplies them as a new epoch. A repaired

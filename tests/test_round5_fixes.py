@@ -10,7 +10,8 @@
 * interval_join validates its ``how`` (only inner/left_outer are covered
   by the contract, watermark and eviction assumptions);
 * the registry holds EXACTLY 50 entries (the driver's gate window — see
-  REGISTRY.md) and every query has an oracle.
+  REGISTRY.md) and every query has an oracle, and PLANS.md audits exactly
+  the registry's queries.
 """
 
 from __future__ import annotations
@@ -117,3 +118,15 @@ def test_registry_is_exactly_the_gate_window():
     assert set(QUERIES) == set(ORACLES)
     assert "cdc_schema_evolution" in QUERIES
     assert "stream_interval_join_both" in QUERIES
+
+
+def test_plans_md_audits_exactly_the_registry():
+    import re
+
+    from nifi_nlp_processor_spark.queries import QUERIES
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    with open(path) as fh:
+        sections = re.findall(r"^## (\S+)\s*$", fh.read(), flags=re.M)
+    assert len(sections) == len(set(sections))
+    assert set(sections) == set(QUERIES)
