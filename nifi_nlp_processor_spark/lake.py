@@ -92,6 +92,19 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   Both strategies resolve by the identical order struct, so winners —
   tie-breaks included — are bit-identical (asserted in tests).
 
+* **Per-handle caches** — three, none of which holds anything a later
+  commit can change: parsed manifests keyed by file name and parsed
+  schema files keyed by name (both immutable once published), and the
+  expression cache (``_cached``): column lists that depend only on a
+  schema and the table layout — the read path's cast list, the LWW fold,
+  ``table_changes``' image projections, the merge's input projection,
+  window and projections, the bucket expression. Each is built once per
+  handle and reused by every epoch and read, since a plan's build on the
+  driver costs py4j round trips per column expression. The merge also
+  builds each input in one ``select`` (cast, bucket, side and salt
+  together), because every DataFrame op re-runs the analyzer over the
+  whole plan.
+
 Single-writer assumption: one runner commits at a time (the driver of the
 streaming query). A second writer that read the ledger before a commit it
 races gets ``CommitConflictError`` (retryable: the retry re-reads the
@@ -111,7 +124,7 @@ from collections.abc import Callable
 from concurrent.futures import Future
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -246,19 +259,6 @@ def _write_json(path: str, obj, replace: bool = True) -> None:
     os.unlink(tmp)
 
 
-def align(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project df onto ``schema``: missing columns become typed nulls,
-    present columns are cast (the read path for old-schema data files)."""
-    cols = []
-    have = {f.name for f in df.schema.fields}
-    for f in schema.fields:
-        if f.name in have:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
-
-
 @dataclass
 class MergeMetrics:
     epoch_id: int
@@ -309,6 +309,9 @@ class ParquetLakeTable:
         self.root = root
         self._commit_cache: dict[str, dict] = {}
         self._schema_cache: dict[str, T.StructType] = {}
+        # column lists that depend only on a schema and the layout (see
+        # ``_cached``)
+        self._expr_cache: dict[tuple, object] = {}
         # the bootstrap cutover staged for a table's first commit
         self._cutover: int | None = None
         os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
@@ -661,8 +664,12 @@ class ParquetLakeTable:
             prev, sorted(todo), self._file_schema(prev["schema"])
         ).withColumn(BUCKET_COL, self._bucket_expr(self._layout(prev)["n_buckets"]))
         # one task per bucket → one output file per bucket, sorted on the
-        # merge key so row groups stay range-clustered for turn scans
-        df = df.repartition(len(todo), F.col(BUCKET_COL)).sortWithinPartitions(*self.key_cols)
+        # merge key so row groups stay range-clustered for turn scans. The
+        # sort leads with the bucket: the partitioned write sorts on it, and
+        # a sort that does not start with it would be replaced, not kept
+        df = df.repartition(len(todo), F.col(BUCKET_COL)).sortWithinPartitions(
+            BUCKET_COL, *self.key_cols
+        )
         out = {"buckets_compacted": len(todo), "files_before": files_before}
 
         def manifest(parts: dict, _footers: dict) -> dict:
@@ -721,7 +728,8 @@ class ParquetLakeTable:
                 .withColumn(BUCKET_COL, self._bucket_expr(n_buckets))
                 .observe(obs, F.count(F.lit(1)).alias("rows"))
                 .repartition(n_buckets * WRITE_SALT, F.col(BUCKET_COL), salt)
-                .sortWithinPartitions(*self.key_cols)
+                # bucket first, as in compact: the write keeps this order
+                .sortWithinPartitions(BUCKET_COL, *self.key_cols)
             )
 
         def manifest(parts: dict, footers: dict) -> dict:
@@ -862,6 +870,35 @@ class ParquetLakeTable:
         that grows with the touched buckets' file counts."""
         return _full_schema(self._stored_schema(sname))
 
+    def _cached(self, key: tuple, build: Callable[[], object]):
+        """``build()``, once per handle and ``key``. Every Column a plan is
+        built from costs py4j round trips to create, and most of a plan's
+        columns depend only on a schema and the table layout. Such lists
+        are cached here, keyed on those inputs (schemas, bucket count, key
+        columns), and reused by every epoch and read. A Column is an
+        unresolved expression, so one applies to any DataFrame of the
+        session. Nothing epoch-specific is cached: no literal epoch id, no
+        ``Observation``, no salt map with entries. The cache lives on the
+        handle, so a Column never outlives the session it was built in."""
+        v = self._expr_cache.get(key)
+        if v is None:
+            v = self._expr_cache[key] = build()
+        return v
+
+    def _align_cols(self, have: T.StructType, schema: T.StructType) -> list[Column]:
+        """Projection of rows stored under ``have`` onto ``schema``:
+        missing columns become typed nulls, present columns are cast (the
+        read path for old-schema data files)."""
+
+        def build() -> list[Column]:
+            names = {f.name for f in have.fields}
+            return [
+                (F.col(f.name) if f.name in names else F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ]
+
+        return self._cached(("align", have, schema), build)
+
     def _write_schema(self, schema: T.StructType, version: int) -> str:
         # published atomically (same as _publish): the per-handle schema
         # cache and the inference-free read path depend on a schema file
@@ -877,27 +914,31 @@ class ParquetLakeTable:
         """Snapshot including meta columns and tombstones; ``at_seq`` time-
         travels to an older manifest (valid while its data dirs survive
         ``expire_snapshots``)."""
-        c = self.commit_at(at_seq) if at_seq is not None else self.last_commit()
-        if c is None or not c["buckets"]:
-            base = self._stored_schema(c["schema"]) if c is not None else T.StructType([])
-            return self.spark.createDataFrame(
-                [], _full_schema(base).add(BUCKET_COL, T.IntegerType())
-            )
-        # shared delta-aware reader: old-schema files are cast-aligned, and
-        # buckets holding merge-on-read deltas are LWW-folded on the way out
-        out = self._read_manifest_buckets(c, sorted(c["buckets"]), self._file_schema(c["schema"]))
+        c, rows = self._snapshot(at_seq)
         # partitionBy writes the bucket as a directory key; recover it under
         # the layout of the snapshot read, not the table's current one
-        return out.withColumn(BUCKET_COL, self._bucket_expr(self._layout(c)["n_buckets"]))
+        return rows.withColumn(BUCKET_COL, self._bucket_expr(self._layout(c)["n_buckets"]))
 
     def read(self, at_seq: int | None = None) -> DataFrame:
         """Live rows (tombstones filtered, meta dropped); ``at_seq`` reads
         an older snapshot (time travel)."""
-        return (
-            self.read_raw(at_seq)
-            .where(~F.col(META_DELETED))
-            .drop(META_LSN, META_DELETED, BUCKET_COL)
-        )
+        return self._live(self._snapshot(at_seq)[1])
+
+    def _snapshot(self, at_seq: int | None) -> tuple[dict | None, DataFrame]:
+        """(manifest, its rows with the meta columns, no bucket column) of
+        snapshot ``at_seq`` or the head."""
+        c = self.commit_at(at_seq) if at_seq is not None else self.last_commit()
+        if c is None or not c["buckets"]:
+            base = self._stored_schema(c["schema"]) if c is not None else T.StructType([])
+            return c, self.spark.createDataFrame([], _full_schema(base))
+        # shared delta-aware reader: old-schema files are cast-aligned, and
+        # buckets holding merge-on-read deltas are LWW-folded on the way out
+        return c, self._read_manifest_buckets(c, sorted(c["buckets"]), self._file_schema(c["schema"]))
+
+    def _live(self, rows: DataFrame) -> DataFrame:
+        """``rows`` without tombstones and meta columns."""
+        live = self._cached(("live",), lambda: ~F.col(META_DELETED))
+        return rows.where(live).drop(META_LSN, META_DELETED)
 
     def _collect_part_stats(self, abs_dir: str, schema: T.StructType) -> dict:
         """Per-bucket min/max of the table's ``stats_cols`` over ONE freshly
@@ -925,14 +966,16 @@ class ParquetLakeTable:
             for r in rows
         }
 
-    def _with_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
-        """Add ``_salt`` = pmod(xxhash64(key), per-bucket fan-out). Rows
-        whose bucket has no fan-out (a delta's unsalted buckets) get a null
-        salt: each such bucket is one group, hashed to a stable partition.
+    def _salt_col(self, salts: dict[int, int], bucket: Column, keys: list[Column]) -> Column | None:
+        """``_salt`` = pmod(xxhash64(key), the bucket's fan-out), over the
+        given bucket and key expressions. Rows whose bucket has no fan-out
+        (a delta's unsalted buckets) get a null salt: each such bucket is
+        one group, hashed to a stable partition.
 
         Small maps inline as a literal ``create_map`` lookup (no extra plan
-        node); wide epochs (hundreds+ touched buckets) switch to a broadcast
-        hash join — the literal-map lookup is a linear scan per row."""
+        node); ``None`` for a wide epoch (hundreds+ touched buckets), which
+        ``_join_salt`` serves with a broadcast hash join — the literal-map
+        lookup is a linear scan per row."""
         if not salts:
             # every salt 0, but still an expression of the key: a literal
             # would be folded out of the window's partitioning, which the
@@ -940,20 +983,133 @@ class ParquetLakeTable:
             fanout = F.lit(1)
         elif len(salts) <= SALT_MAP_LITERAL_MAX:
             fanout = F.element_at(
-                F.create_map(
-                    *[F.lit(x) for b, s in sorted(salts.items()) for x in (b, s)]
-                ),
-                F.col(BUCKET_COL),
+                F.create_map(*[F.lit(x) for b, s in sorted(salts.items()) for x in (b, s)]),
+                bucket,
             )
         else:
-            smap = self.spark.createDataFrame(
-                sorted(salts.items()), f"{BUCKET_COL} int, _fanout int"
-            )
-            df = df.join(F.broadcast(smap), BUCKET_COL, "left")
-            fanout = F.col("_fanout")
-        return df.withColumn(
-            "_salt", F.pmod(F.xxhash64(*self.key_cols), fanout)
-        ).drop("_fanout")
+            return None
+        return F.pmod(F.xxhash64(*keys), fanout).alias("_salt")
+
+    def _join_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
+        """``df`` with ``_salt`` from a broadcast (bucket, fan-out) table:
+        the wide-map form of ``_salt_col``."""
+        smap = self.spark.createDataFrame(sorted(salts.items()), f"{BUCKET_COL} int, _fanout int")
+        return (
+            df.join(F.broadcast(smap), BUCKET_COL, "left")
+            .withColumn("_salt", F.pmod(F.xxhash64(*self.key_cols), F.col("_fanout")))
+            .drop("_fanout")
+        )
+
+    def _merge_input(
+        self, have: T.StructType, schema: T.StructType, n: int, lsn_op: tuple[str, str] | None
+    ) -> tuple[list[Column], Column, list[Column], Column]:
+        """One merge input's projection from rows stored under ``have``:
+        ``(cols, bucket, keys, no_salt)``. ``cols`` casts the table
+        columns to ``schema`` and adds ``_lsn``, ``_deleted``, ``_b`` under
+        ``n`` buckets and ``_src``. ``lsn_op`` names the batch's lsn and op
+        columns; ``None`` marks a target file set, whose ``have`` and
+        ``schema`` are full schemas (meta columns included). The bucket and
+        the salt are computed from the CAST key expressions — a target row
+        and a batch row of one key must land in the same (bucket, salt)
+        group even when the batch widens a key column — and ``no_salt`` is
+        the salt of an empty salt map."""
+
+        def build() -> tuple:
+            names = {f.name for f in have.fields}
+            cast = {
+                f.name: (F.col(f.name) if f.name in names else F.lit(None)).cast(f.dataType)
+                for f in schema.fields
+            }
+            if lsn_op is not None:
+                cast[META_LSN] = F.col(lsn_op[0]).cast("long")
+                cast[META_DELETED] = F.col(lsn_op[1]) == "D"
+            bucket = F.pmod(F.xxhash64(cast[self.bucket_key]), F.lit(n)).cast("int")
+            keys = [cast[k] for k in self.key_cols]
+            cols = [e.alias(c) for c, e in cast.items()] + [
+                bucket.alias(BUCKET_COL),
+                F.lit(lsn_op is not None).alias("_src"),
+            ]
+            return cols, bucket, keys, self._salt_col({}, bucket, keys)
+
+        return self._cached(("merge-input", have, schema, n, lsn_op), build)
+
+    def _merge_exprs(self, schema: T.StructType, mor_delta: bool, lww: str) -> dict:
+        """The LWW resolution's column lists for table schema ``schema``:
+        the write layout, the window select (or the aggregation) with the
+        conflict flags of a merge that reads its target, the winner filter,
+        the ``Observation``'s aggregates and the final projection."""
+
+        def build() -> dict:
+            keys = [F.col(k) for k in self.key_cols]
+            non_key = [f.name for f in schema.fields if f.name not in self.key_cols]
+            meta = [F.col(META_LSN), F.col(META_DELETED)]
+            payload, order = lww_payload_order(non_key)
+            # conflict flags: which side (batch or target) each key's
+            # versions came from — only a merge that reads the target can
+            # classify
+            flags = {} if mor_delta else {
+                "_src_lsn": F.max(F.when(F.col("_src"), F.col(META_LSN))),
+                "_tgt_lsn": F.max(F.when(~F.col("_src"), F.col(META_LSN))),
+                "_tgt_deleted": F.max(F.when(~F.col("_src"), F.col(META_DELETED))),
+            }
+            x: dict = {"layout": [F.col(BUCKET_COL), F.col("_salt")]}
+            if lww == "window":
+                w = Window.partitionBy(BUCKET_COL, "_salt", *self.key_cols).orderBy(
+                    F.desc(order)
+                )
+                wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+                x["window"] = [
+                    *keys,
+                    F.col(BUCKET_COL),
+                    *[F.col(c) for c in non_key],
+                    *meta,
+                    F.row_number().over(w).alias("_rn"),
+                    *[e.over(wf).alias(name) for name, e in flags.items()],
+                ]
+                x["winner"] = F.col("_rn") == 1
+            else:
+                x["group"] = [*keys, F.col(BUCKET_COL)]
+                x["agg"] = [
+                    F.max_by(payload, order).alias("_w"),
+                    *[e.alias(name) for name, e in flags.items()],
+                ]
+                x["agg_out"] = [
+                    *keys,
+                    F.col(BUCKET_COL),
+                    *[F.col(f"_w.{c}").alias(c) for c in non_key + [META_LSN, META_DELETED]],
+                    *[F.col(name) for name in flags],
+                ]
+            rows_applied = F.count(F.lit(1)).alias("rows_applied")
+            if mor_delta:
+                x["observe"] = [rows_applied]
+            else:
+                src_won = F.col("_src_lsn").isNotNull() & (
+                    F.col("_tgt_lsn").isNull() | (F.col("_src_lsn") > F.col("_tgt_lsn"))
+                )
+                live = ~F.col(META_DELETED)
+
+                def total(cond: Column, name: str) -> Column:
+                    return F.sum(cond.cast("long")).alias(name)
+
+                x["observe"] = [
+                    rows_applied,
+                    total(src_won & F.col("_tgt_lsn").isNotNull() & live, "updated"),
+                    total(src_won & F.col("_tgt_lsn").isNull() & live, "inserted"),
+                    total(
+                        src_won & F.col(META_DELETED)
+                        & ~F.coalesce(F.col("_tgt_deleted"), F.lit(False)),
+                        "deleted",
+                    ),
+                    total(
+                        F.col("_src_lsn").isNotNull() & F.col("_tgt_lsn").isNotNull()
+                        & (F.col("_src_lsn") < F.col("_tgt_lsn")),
+                        "stale",
+                    ),
+                ]
+            x["final"] = [F.col(f.name) for f in schema.fields] + meta + [F.col(BUCKET_COL)]
+            return x
+
+        return self._cached(("merge", schema, mor_delta, lww), build)
 
     @staticmethod
     def _part_footers(abs_dir: str) -> dict[int, tuple[int, int | None]]:
@@ -1050,8 +1206,9 @@ class ParquetLakeTable:
             if not skip:
                 keep.append(b)
 
-        out = self._read_manifest_buckets(c, sorted(keep), self._file_schema(c["schema"]))
-        out = out.where(~F.col(META_DELETED)).drop(META_LSN, META_DELETED)
+        out = self._live(
+            self._read_manifest_buckets(c, sorted(keep), self._file_schema(c["schema"]))
+        )
         for col, (lo, hi) in predicates.items():
             if lo is not None:
                 out = out.where(F.col(col) >= lo)
@@ -1075,19 +1232,26 @@ class ParquetLakeTable:
         agree (see ``lww_payload_order``). Partial+final aggregation,
         map-side combine; the shuffle covers only the rows handed in
         (delta-holding buckets), never the whole table."""
-        non_key = [
-            f.name
-            for f in full.fields
-            if f.name not in self.key_cols and f.name not in (META_LSN, META_DELETED)
-        ]
-        payload, order = lww_payload_order(non_key)
-        agg = df.groupBy(*self.key_cols).agg(F.max_by(payload, order).alias("_w"))
-        return agg.select(
-            *self.key_cols,
-            *[F.col(f"_w.{c}").alias(c) for c in non_key],
-            F.col(f"_w.{META_LSN}").alias(META_LSN),
-            F.col(f"_w.{META_DELETED}").alias(META_DELETED),
-        ).select(*[F.col(f.name) for f in full.fields])
+
+        def build() -> tuple[list[Column], Column, list[Column]]:
+            non_key = [
+                f.name
+                for f in full.fields
+                if f.name not in self.key_cols and f.name not in (META_LSN, META_DELETED)
+            ]
+            payload, order = lww_payload_order(non_key)
+            return (
+                [F.col(k) for k in self.key_cols],
+                F.max_by(payload, order).alias("_w"),
+                [
+                    F.col(f.name) if f.name in self.key_cols
+                    else F.col(f"_w.{f.name}").alias(f.name)
+                    for f in full.fields
+                ],
+            )
+
+        keys, winner, cols = self._cached(("fold", full), build)
+        return df.groupBy(*keys).agg(winner).select(*cols)
 
     def _read_manifest_buckets(
         self, c: dict, bucket_ids: list[str], full: T.StructType
@@ -1118,10 +1282,12 @@ class ParquetLakeTable:
 
         def _union(by_schema: dict[str, list[str]]) -> DataFrame | None:
             # explicit per-version file schema: no footer inference pass
-            parts = [
-                align(self.spark.read.schema(self._file_schema(sname)).parquet(*paths), full)
-                for sname, paths in by_schema.items()
-            ]
+            parts = []
+            for sname, paths in by_schema.items():
+                have = self._file_schema(sname)
+                parts.append(
+                    self.spark.read.schema(have).parquet(*paths).select(*self._align_cols(have, full))
+                )
             if not parts:
                 return None
             out = parts[0]
@@ -1187,20 +1353,27 @@ class ParquetLakeTable:
         )
         old = self._read_manifest_buckets(c_from, changed, full)
         new = self._read_manifest_buckets(c_to, changed, full)
+        o_cols, n_cols, ct, changed_row, out = self._cached(
+            ("changes", schema, images), lambda: self._changes_exprs(schema, images)
+        )
+        j = old.select(*o_cols).join(new.select(*n_cols), self.key_cols, "full_outer")
+        return j.withColumn("change_type", ct).where(changed_row).select(*out)
+
+    def _changes_exprs(self, schema: T.StructType, images: str) -> tuple:
+        """``table_changes``' column lists for table schema ``schema``: the
+        two sides' image projections, ``change_type``, its filter and the
+        output projection."""
+        keys = [F.col(k) for k in self.key_cols]
         data_cols = [f.name for f in schema.fields if f.name not in self.key_cols]
-        o = old.select(
-            *self.key_cols,
-            F.struct(*[F.col(c) for c in data_cols]).alias("_oimg"),
-            F.col(META_LSN).alias("_olsn"),
-            F.col(META_DELETED).alias("_odel"),
-        )
-        n = new.select(
-            *self.key_cols,
-            F.struct(*[F.col(c) for c in data_cols]).alias("_nimg"),
-            F.col(META_LSN).alias("_nlsn"),
-            F.col(META_DELETED).alias("_ndel"),
-        )
-        j = o.join(n, self.key_cols, "full_outer")
+
+        def side(tag: str) -> list[Column]:
+            return [
+                *keys,
+                F.struct(*[F.col(c) for c in data_cols]).alias(f"_{tag}img"),
+                F.col(META_LSN).alias(f"_{tag}lsn"),
+                F.col(META_DELETED).alias(f"_{tag}del"),
+            ]
+
         old_live = F.col("_olsn").isNotNull() & ~F.coalesce("_odel", F.lit(False))
         new_live = F.col("_nlsn").isNotNull() & ~F.coalesce("_ndel", F.lit(False))
         ct = (
@@ -1208,37 +1381,32 @@ class ParquetLakeTable:
             .when(old_live & ~new_live, F.lit("delete"))
             .when(old_live & new_live & (F.col("_nlsn") > F.col("_olsn")), F.lit("update"))
         )
-        j = j.withColumn("change_type", ct).where(F.col("change_type").isNotNull())
+        head = [*keys, F.col("change_type"), F.col("_nlsn").alias("lsn")]
         if images == "both":
             # pre+post row images (Delta CDF's update_preimage/postimage,
             # folded into one row) — what algebraic downstream maintenance
             # (incremental_rollup) needs to retract the old contribution
             # and add the new one in a single pass.
-            live_pre = F.when(old_live, F.col("_oimg"))
-            live_post = F.when(new_live, F.col("_nimg"))
-            return j.select(
-                *self.key_cols,
-                F.col("change_type"),
-                F.col("_nlsn").alias("lsn"),
-                live_pre.alias("pre"),
-                live_post.alias("post"),
+            out = [
+                *head,
+                F.when(old_live, F.col("_oimg")).alias("pre"),
+                F.when(new_live, F.col("_nimg")).alias("post"),
+            ]
+        else:
+            img = F.when(F.col("change_type") == "delete", F.col("_oimg")).otherwise(
+                F.col("_nimg")
             )
-        img = F.when(F.col("change_type") == "delete", F.col("_oimg")).otherwise(
-            F.col("_nimg")
-        )
-        return j.select(
-            *self.key_cols,
-            F.col("change_type"),
-            F.col("_nlsn").alias("lsn"),
-            *[img.getField(c).alias(c) for c in data_cols],
-        )
+            out = [*head, *[img.getField(c).alias(c) for c in data_cols]]
+        return side("o"), side("n"), ct, F.col("change_type").isNotNull(), out
 
     # ---- merge ------------------------------------------------------
 
     def _bucket_expr(self, n: int):
         """A row's bucket under an ``n``-bucket layout: readers and merges
         pass the ``n_buckets`` of the manifest they act on."""
-        return F.pmod(F.xxhash64(self.bucket_key), F.lit(n)).cast("int")
+        return self._cached(
+            ("bucket", n), lambda: F.pmod(F.xxhash64(self.bucket_key), F.lit(n)).cast("int")
+        )
 
     def probe_batch(
         self, pdf: DataFrame, lsn_col: str = "lsn"
@@ -1398,32 +1566,17 @@ class ParquetLakeTable:
 
         prev = self.last_commit()
         n = self._layout(prev)["n_buckets"]
-        data_cols = [c for c in src.columns if c not in (lsn_col, op_col, "epoch_id")]
-        incoming = T.StructType([f for f in src.schema.fields if f.name in data_cols])
-        current = self.current_schema()
-        if current is None:
+        src_schema = src.schema  # one analysis round trip; not cached by PySpark
+        incoming = T.StructType(
+            [f for f in src_schema.fields if f.name not in (lsn_col, op_col, "epoch_id")]
+        )
+        if prev is None:
             schema, schema_changed = incoming, True
             version = 1
         else:
-            schema, schema_changed = evolve_schema(current, incoming)
+            schema, schema_changed = evolve_schema(self._stored_schema(prev["schema"]), incoming)
             version = (prev["schema_version"] + 1) if schema_changed else prev["schema_version"]
         schema_name = self._write_schema(schema, version) if schema_changed else prev["schema"]
-
-        have = {f.name for f in src.schema.fields}
-        src_rows = (
-            src.select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ],
-                F.col(lsn_col).cast("long").alias(META_LSN),
-                (F.col(op_col) == "D").alias(META_DELETED),
-            )
-            .where(F.col(META_LSN).isNotNull())
-            .withColumn(BUCKET_COL, self._bucket_expr(n))
-        )
         mor_delta = not self.merge_probes(mode)
 
         # Probe job (CoW and a first merge only): touched buckets, per-bucket
@@ -1464,39 +1617,7 @@ class ParquetLakeTable:
                 b for b, ptr in sorted(prev["buckets"].items())
                 if len(ptr.get("deltas", [])) >= max(1, max_deltas - 1)
             ]
-        full = _full_schema(schema)
-        tgt_parts = []
-        by_schema: dict[str, list[str]] = {}
-        for b in tgt:
-            ptr = prev["buckets"].get(b)
-            if ptr:
-                # every part: base + any merge-on-read deltas — the LWW
-                # resolution below folds them into the batch and the
-                # rewrite retires the bucket's delta pointers
-                for part in self._ptr_parts(ptr):
-                    by_schema.setdefault(part["schema"], []).append(
-                        os.path.join(self.root, part["path"])
-                    )
-        for sname, paths in by_schema.items():
-            # explicit schema: the merge's target read otherwise pays a
-            # footer schema-inference pass per epoch (driver-side, scales
-            # with touched buckets × salt files — pure fixed cost)
-            df = self.spark.read.schema(self._file_schema(sname)).parquet(*paths)
-            tgt_parts.append(
-                align(df, full).withColumn(BUCKET_COL, self._bucket_expr(n))
-            )
 
-        src_tagged = src_rows.withColumn("_src", F.lit(True))
-        merged = src_tagged
-        for p in tgt_parts:
-            merged = merged.unionByName(p.withColumn("_src", F.lit(False)))
-
-        non_key = [f.name for f in schema.fields if f.name not in self.key_cols]
-        # LWW resolution — the same total order (lww_payload_order, shared
-        # with the MoR read fold so staged folds agree with single-pass
-        # merges) executed by one of two physical strategies; see the module
-        # docstring for the full trade-off.
-        payload, order = lww_payload_order(non_key)
         # ADAPTIVE write salting: a mega-conversation concentrates in one
         # bucket; a one-task-per-bucket layout would serialize it and cap
         # scaling at any core count (SURVEY §4.2 #1). Hash-salting on the
@@ -1529,26 +1650,51 @@ class ParquetLakeTable:
             salts = {
                 int(b): f for b in prev["buckets"] if (f := fanout(manifest_rows(b))) > 1
             }
-
-            def lay_out(df: DataFrame) -> DataFrame:
-                return self._with_salt(df, salts).repartition(
-                    F.col(BUCKET_COL), F.col("_salt")
-                )
+            n_parts = []
         else:
             salts = {b: fanout(n + manifest_rows(b)) for b, (_m, n) in probe.items()}
-            n_parts = max(1, sum(salts.values()))
+            n_parts = [max(1, sum(salts.values()))]
 
-            def lay_out(df: DataFrame) -> DataFrame:
-                return self._with_salt(df, salts).repartition(
-                    n_parts, F.col(BUCKET_COL), F.col("_salt")
-                )
-        # conflict flags: which side (batch or target) each key's versions
-        # came from — only a merge that reads the target can classify
-        flags = {} if mor_delta else {
-            "_src_lsn": F.max(F.when(F.col("_src"), F.col(META_LSN))),
-            "_tgt_lsn": F.max(F.when(~F.col("_src"), F.col(META_LSN))),
-            "_tgt_deleted": F.max(F.when(~F.col("_src"), F.col(META_DELETED))),
-        }
+        full = _full_schema(schema)
+        by_schema: dict[str, list[str]] = {}
+        for b in tgt:
+            ptr = prev["buckets"].get(b)
+            if ptr:
+                # every part: base + any merge-on-read deltas — the LWW
+                # resolution below folds them into the batch and the
+                # rewrite retires the bucket's delta pointers
+                for part in self._ptr_parts(ptr):
+                    by_schema.setdefault(part["schema"], []).append(
+                        os.path.join(self.root, part["path"])
+                    )
+
+        def side(df: DataFrame, have: T.StructType, lsn_op: tuple[str, str] | None) -> DataFrame:
+            # one select per side: the cast projection, _b, _src and, when
+            # the salt map is small enough to inline, _salt
+            cols, bucket, keys, no_salt = self._merge_input(
+                have, full if lsn_op is None else schema, n, lsn_op
+            )
+            salt = no_salt if not salts else self._salt_col(salts, bucket, keys)
+            return df.select(*cols, *([salt] if salt is not None else []))
+
+        # the batch, null-lsn rows dropped (no watermark can cover them) ...
+        has_lsn = self._cached(("has-lsn",), lambda: F.col(META_LSN).isNotNull())
+        merged = side(src, src_schema, (lsn_col, op_col)).where(has_lsn)
+        for sname, paths in by_schema.items():
+            # ... and the target file sets, each read with its explicit
+            # schema: the merge's target read otherwise pays a footer
+            # schema-inference pass per epoch (driver-side, scales with
+            # touched buckets × salt files — pure fixed cost)
+            have = self._file_schema(sname)
+            merged = merged.unionByName(
+                side(self.spark.read.schema(have).parquet(*paths), have, None)
+            )
+
+        # LWW resolution — the same total order (lww_payload_order, shared
+        # with the MoR read fold so staged folds agree with single-pass
+        # merges) executed by one of two physical strategies; see the module
+        # docstring for the full trade-off.
+        x = self._merge_exprs(schema, mor_delta, lww)
         if lww == "window":
             # One shuffle, straight into the write layout: hash partitioning
             # on (bucket, salt) clusters every key (both are functions of
@@ -1558,76 +1704,26 @@ class ParquetLakeTable:
             # below inherits the layout unchanged. row_number()==1 over the
             # LWW order descending is argmax(order), i.e. exactly the
             # max_by winner; the flag aggregates ride the same sorted frame.
-            w = Window.partitionBy(BUCKET_COL, "_salt", *self.key_cols).orderBy(
-                F.desc(order)
-            )
-            wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+            if len(salts) > SALT_MAP_LITERAL_MAX:
+                merged = self._join_salt(merged, salts)
             out = (
-                lay_out(merged).select(
-                    *self.key_cols,
-                    F.col(BUCKET_COL),
-                    *[F.col(c) for c in non_key],
-                    F.col(META_LSN),
-                    F.col(META_DELETED),
-                    F.row_number().over(w).alias("_rn"),
-                    *[e.over(wf).alias(n) for n, e in flags.items()],
-                )
-                .where(F.col("_rn") == 1)
-                .drop("_rn")
+                merged.repartition(*n_parts, *x["layout"])
+                .select(*x["window"])
+                .where(x["winner"])
             )
         else:
             # max_by(payload, order) partial+final aggregation: map-side
             # combine folds per-key duplicate storms before the shuffle
             # (then the write lays the result out, below).
-            winner = F.max_by(payload, order).alias("_w")
-            agg = merged.groupBy(*self.key_cols, BUCKET_COL).agg(
-                winner, *[e.alias(n) for n, e in flags.items()]
-            )
-            out = agg.select(
-                *self.key_cols,
-                F.col(BUCKET_COL),
-                *[F.col(f"_w.{c}").alias(c) for c in non_key],
-                F.col(f"_w.{META_LSN}").alias(META_LSN),
-                F.col(f"_w.{META_DELETED}").alias(META_DELETED),
-                *[F.col(n) for n in flags],
-            )
+            out = merged.groupBy(*x["group"]).agg(*x["agg"]).select(*x["agg_out"])
 
         obs = Observation(f"merge-{epoch_id}")
-        if mor_delta:
-            # target unread → conflict classification impossible at write
-            # time; observe only the rows written — a folded bucket's whole
-            # rewrite included, as a CoW merge counts its touched buckets
-            # (metrics report -1)
-            out = out.observe(obs, F.count(F.lit(1)).alias("rows_applied"))
-        else:
-            src_won = F.col("_src_lsn").isNotNull() & (
-                F.col("_tgt_lsn").isNull() | (F.col("_src_lsn") > F.col("_tgt_lsn"))
-            )
-            out = out.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_applied"),
-                F.sum(
-                    (
-                        src_won & F.col("_tgt_lsn").isNotNull() & ~F.col(META_DELETED)
-                    ).cast("long")
-                ).alias("updated"),
-                F.sum((src_won & F.col("_tgt_lsn").isNull() & ~F.col(META_DELETED)).cast("long")).alias(
-                    "inserted"
-                ),
-                F.sum((src_won & F.col(META_DELETED) & ~F.coalesce(F.col("_tgt_deleted"), F.lit(False))).cast("long")).alias("deleted"),
-                F.sum(
-                    (
-                        F.col("_src_lsn").isNotNull()
-                        & F.col("_tgt_lsn").isNotNull()
-                        & (F.col("_src_lsn") < F.col("_tgt_lsn"))
-                    ).cast("long")
-                ).alias("stale"),
-            )
-        final_cols = (
-            [F.col(f.name) for f in schema.fields]
-            + [F.col(META_LSN), F.col(META_DELETED), F.col(BUCKET_COL)]
-        )
-        out = out.select(*final_cols)
+        # MoR: target unread → conflict classification impossible at write
+        # time; observe only the rows written — a folded bucket's whole
+        # rewrite included, as a CoW merge counts its touched buckets
+        # (metrics report -1). The final select drops the flags, _rn and
+        # _salt.
+        out = out.observe(obs, *x["observe"]).select(*x["final"])
 
         t_write = time.time()
         if lww == "agg":
@@ -1635,8 +1731,10 @@ class ParquetLakeTable:
             # for the write, sorted on the key (the window strategy already
             # produced exactly this layout — T3 stable in-partition order —
             # so it writes as-is with no exchange)
+            salt = self._salt_col(salts, F.col(BUCKET_COL), [F.col(k) for k in self.key_cols])
+            out = out.select("*", salt) if salt is not None else self._join_salt(out, salts)
             out = (
-                lay_out(out)
+                out.repartition(*n_parts, *x["layout"])
                 .sortWithinPartitions(BUCKET_COL, *self.key_cols)
                 .drop("_salt")
             )

@@ -29,11 +29,21 @@ def validity(keys: list[str] = ["conv_id", "turn_idx"], lsn_col: str = "lsn", op
     return reason
 
 
-def split_valid(df: DataFrame, keys: list[str] = ["conv_id", "turn_idx"], lsn_col: str = "lsn", op_col: str = "op") -> tuple[DataFrame, DataFrame]:
+def split_valid(
+    df: DataFrame,
+    keys: list[str] = ["conv_id", "turn_idx"],
+    lsn_col: str = "lsn",
+    op_col: str = "op",
+    reason: Column | None = None,
+) -> tuple[DataFrame, DataFrame]:
     """(valid, quarantined-with-reason). One pass over the plan each; the
     scan is shared via the same source relation and both filters push down.
+    ``reason``: a ``validity`` column built once for the same arguments, by
+    a caller that splits every epoch (a Column is an unresolved expression,
+    so one serves every batch of the session).
     """
-    tagged = df.withColumn("_reject_reason", validity(keys, lsn_col, op_col))
-    valid = tagged.where(F.col("_reject_reason").isNull()).drop("_reject_reason")
-    bad = tagged.where(F.col("_reject_reason").isNotNull())
+    if reason is None:
+        reason = validity(keys, lsn_col, op_col)
+    valid = df.where(reason.isNull())
+    bad = df.withColumn("_reject_reason", reason).where(F.col("_reject_reason").isNotNull())
     return valid, bad

@@ -2908,6 +2908,16 @@ def q_stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out)
 
 
+def _stop_streams(handles: list) -> None:
+    """Stop every ``(tag, out, query)`` handle still active. The ``_both``
+    entries call it on every exit, so a drain timeout or a failed start
+    leaves no query running: the next call's scratch sweep would delete a
+    live query's directories."""
+    for _tag, _out, q in handles:
+        if q.isActive:
+            q.stop()
+
+
 def q_stream_interval_join_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both watermarked stream-stream interval-join modes in one result,
     tagged by variant (the ``sessionize_stream_both`` consolidation
@@ -2931,27 +2941,29 @@ def q_stream_interval_join_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = base + "_src"
     ev.coalesce(4).write.parquet(src)
     handles = []
-    for how in ("inner", "left_outer"):
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, value double"
-        ).parquet(src)
-        out, ckpt = f"{base}_{how}_out", f"{base}_{how}_ckpt"
-        q = (
-            attribution_pairs(stream, how=how)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        handles.append((how, out, q))
-    parts = []
-    for how, out, q in handles:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"{how} interval-join stream did not drain within 300 s")
-        parts.append(spark.read.parquet(out).withColumn("variant", F.lit(how)))
+    try:
+        for how in ("inner", "left_outer"):
+            stream = spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, event_type string, value double"
+            ).parquet(src)
+            out, ckpt = f"{base}_{how}_out", f"{base}_{how}_ckpt"
+            q = (
+                attribution_pairs(stream, how=how)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            handles.append((how, out, q))
+        parts = []
+        for how, out, q in handles:
+            if not q.awaitTermination(300):
+                raise TimeoutError(f"{how} interval-join stream did not drain within 300 s")
+            parts.append(spark.read.parquet(out).withColumn("variant", F.lit(how)))
+    finally:
+        _stop_streams(handles)
     return parts[0].unionByName(parts[1])
 
 
@@ -3215,28 +3227,30 @@ def q_sessionize_stream_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their own checkpoints — the consolidated entry costs one staging +
     # max (not sum) of the two stateful drains
     handles = []
-    for tag, emit_on_timeout in (
-        ("closed_by_event", False),
-        ("closed_by_timeout", True),
-    ):
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
-        out, ckpt = f"{base}_{tag}_out", f"{base}_{tag}_ckpt"
-        q = (
-            sessionize_stream(stream, gap_seconds=1800, emit_on_timeout=emit_on_timeout)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        handles.append((tag, out, q))
-    parts = []
-    for tag, out, q in handles:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(f"{tag} sessionize stream did not drain within 300 s")
-        parts.append(spark.read.parquet(out).withColumn("variant", F.lit(tag)))
+    try:
+        for tag, emit_on_timeout in (
+            ("closed_by_event", False),
+            ("closed_by_timeout", True),
+        ):
+            stream = spark.readStream.schema("user_id long, ts timestamp").parquet(src)
+            out, ckpt = f"{base}_{tag}_out", f"{base}_{tag}_ckpt"
+            q = (
+                sessionize_stream(stream, gap_seconds=1800, emit_on_timeout=emit_on_timeout)
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            handles.append((tag, out, q))
+        parts = []
+        for tag, out, q in handles:
+            if not q.awaitTermination(300):
+                raise TimeoutError(f"{tag} sessionize stream did not drain within 300 s")
+            parts.append(spark.read.parquet(out).withColumn("variant", F.lit(tag)))
+    finally:
+        _stop_streams(handles)
     return parts[0].unionByName(parts[1])
 
 

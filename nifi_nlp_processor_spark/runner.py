@@ -37,7 +37,7 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from nifi_nlp_processor_spark.lake import MergeMetrics, ParquetLakeTable
-from nifi_nlp_processor_spark.operators.quarantine import split_valid
+from nifi_nlp_processor_spark.operators.quarantine import split_valid, validity
 
 
 @dataclass
@@ -75,6 +75,9 @@ class CdcEngine:
     results: list[EpochResult] = field(default_factory=list)
     # the one long-lived thread DLQ writes run on, beside the merge
     _dlq_pool: ThreadPoolExecutor | None = field(default=None, init=False, repr=False)
+    # the split's expressions, built once per cutover (a Column is an
+    # unresolved expression; building one costs py4j round trips)
+    _split_exprs: dict = field(default_factory=dict, init=False, repr=False)
 
     def apply_epoch(
         self,
@@ -156,10 +159,16 @@ class CdcEngine:
         re-insert it. The cutover is read from the head manifest
         (``lake.bootstrap_lsn``), which the bootstrap commit itself stamped,
         so a restarted engine on the same root enforces it too."""
-        valid, bad = split_valid(batch, list(self.key_cols))
         cutover = self.lake.bootstrap_lsn
-        if cutover is not None:
-            valid = valid.where(F.col("lsn") > int(cutover))
+        exprs = self._split_exprs.get(cutover)
+        if exprs is None:
+            reason = validity(list(self.key_cols))
+            past = F.col("lsn") > int(cutover) if cutover is not None else None
+            exprs = self._split_exprs[cutover] = (reason, past)
+        reason, past = exprs
+        valid, bad = split_valid(batch, reason=reason)
+        if past is not None:
+            valid = valid.where(past)
         return valid, bad
 
     def _submit_dlq(self, bad: DataFrame) -> Future:

@@ -4,6 +4,19 @@ Local-mode testing uses ``local[N]``; the same settings are what we would
 submit to a real cluster via ``spark-submit --py-files`` (AQE on, Arrow on,
 shuffle partitions sized to the parallelism level rather than the 200
 default).
+
+DataFrame origin capture (``spark.python.sql.dataFrameDebugging.enabled``)
+is off. With it on, PySpark wraps every ``pyspark.sql.functions`` call and
+every Column method: each call looks up the active session, reads
+``spark.sql.stackTracesInDataFrameContext``, walks the Python stack and
+sets and clears the JVM-side origin, mostly as py4j round trips. The
+engine builds a plan per epoch and per read from hundreds of such calls,
+each of which paid that overhead on top of its own work. All the capture
+adds is the Python call site in the query context of an error message;
+the error itself and its JVM stack trace are unchanged.
+PySpark reads the setting once per process, at the first wrapped call
+under an active session, so it holds for every session of a process whose
+first session comes from here.
 """
 
 from __future__ import annotations
@@ -48,6 +61,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

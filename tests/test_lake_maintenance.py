@@ -342,3 +342,56 @@ def test_racing_writer_cannot_replace_a_published_commit(spark, tmp_path, monkey
     b.merge_into(_events(spark, e2), 2)
     assert [c["epoch_id"] for c in fresh.commit_history()] == [0, 1, 2]
     assert len(fresh.read().collect()) == 24
+
+
+def _head_files_sorted_on_key(lake):
+    """{file: sorted on the merge key?} over every parquet file the head
+    commit wrote (its own ``data/cNNNNNNNN`` dir)."""
+    import pyarrow.parquet as pq
+
+    head = lake.last_commit()
+    out = {}
+    for ptr in head["buckets"].values():
+        for part in lake._ptr_parts(ptr):
+            if not part["path"].startswith(f"data/c{head['seq']:08d}/"):
+                continue
+            d = os.path.join(lake.root, part["path"])
+            for f in sorted(os.listdir(d)):
+                if f.endswith(".parquet"):
+                    t = pq.read_table(os.path.join(d, f), columns=lake.key_cols).to_pylist()
+                    keys = [tuple(r[k] for k in lake.key_cols) for r in t]
+                    out[f"{part['path']}/{f}"] = keys == sorted(keys)
+    return out
+
+
+def test_compact_and_rebucket_write_key_sorted_files(spark, tmp_path):
+    """``compact`` and ``rebucket`` promise files sorted on the merge key
+    (range-clustered row groups). Their sort must lead with the bucket:
+    the partitioned write sorts on ``_b`` and drops a key-only sort under
+    it, which left the files in shuffle order."""
+    import random
+
+    rng = random.Random(7)
+    lake = ParquetLakeTable(spark, str(tmp_path / "sorted"), n_buckets=2)
+    engine = CdcEngine(lake=lake, merge_mode="mor")
+    for e in range(3):
+        rows = [
+            (f"c{i}", t, 1000 * e + 10 * i + t, f"v{e}-{i}-{t}", e)
+            for i in range(40) for t in range(5)
+        ]
+        rng.shuffle(rows)
+        engine.apply_epochs(_events(spark, rows), epoch_ids=[e])
+    before = sorted(tuple(r) for r in lake.read().collect())
+    # uncoalesced, the fold's sorted aggregate partitions reach each bucket
+    # interleaved, as they do at any size AQE does not coalesce to one task
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        assert lake.compact()["buckets_compacted"] == 2
+        compacted = _head_files_sorted_on_key(lake)
+        lake.rebucket(3)
+        rebucketed = _head_files_sorted_on_key(lake)
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    assert compacted and all(compacted.values()), compacted
+    assert rebucketed and all(rebucketed.values()), rebucketed
+    assert sorted(tuple(r) for r in lake.read().collect()) == before

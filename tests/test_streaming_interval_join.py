@@ -177,3 +177,23 @@ def test_outer_matched_click_never_gets_null_row(spark, tmp_path):
     # matched click adds nothing
     _write(spark, src, [(98, _t(13, 5), 8, "view", 0.0)])
     assert _drain_outer(spark, src, out, ckpt) == [(1, 2, 600)]
+
+
+def test_drain_timeout_stops_every_handle(spark, monkeypatch, tmp_path):
+    """A ``_both`` streaming entry whose drain times out stops every query
+    it started, not only the one that timed out: a query left running
+    would have its directories deleted by the next call's scratch sweep."""
+    import pytest
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from nifi_nlp_processor_spark import queries
+
+    sf_dir = str(tmp_path)
+    spark.createDataFrame(
+        [(1, _t(9, 0), 7, "click", 0.0), (2, _t(9, 10), 7, "purchase", 5.0)], SCHEMA
+    ).write.parquet(f"{sf_dir}/events.parquet")
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    for entry in (queries.q_stream_interval_join_both, queries.q_sessionize_stream_both):
+        with pytest.raises(TimeoutError):
+            entry(spark, sf_dir)
+        assert [q.name or q.id for q in spark.streams.active] == []
