@@ -81,8 +81,13 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   plus the probe's batch counts in a merge that probes;
   ROWS_PER_WRITE_TASK per task, capped at MAX_WRITE_SALT) — a hot bucket
   fans out, a cold bucket stays one right-sized file instead of 8 tiny
-  ones. A copy-on-write merge gives each (touched bucket, salt) its own
-  write task. A merge-on-read delta write runs no probe, so only
+  ones. A copy-on-write merge (and ``compact``) sizes its exchange to the
+  session's shuffle partitions, which ``session.build_session`` sets to
+  the parallelism level: never more tasks than (touched bucket, salt)
+  groups, never fewer than the hot buckets' salts. A group never spans
+  two tasks, so the files do not depend on the task count; a task that
+  holds several buckets writes them one after another, one file each.
+  A merge-on-read delta write runs no probe, so only
   buckets the manifest already sizes past one task get a salt, and its
   exchange carries no partition count: AQE coalesces it to the epoch's
   size, and a (bucket, salt) group never spans two tasks. A cold bucket is
@@ -261,8 +266,16 @@ def _write_json(path: str, obj, replace: bool = True) -> None:
 
 @dataclass
 class MergeMetrics:
+    """One merge's commit metrics, persisted in its manifest. A CoW merge
+    counts exactly, with no job of its own: ``rows_in_batch`` sums the
+    probe's per-bucket counts, and ``keys_in_batch`` and the conflict
+    classes ride the write's Observation. A MoR delta write reads no
+    target and runs no probe, so it reports ``rows_in_batch``,
+    ``keys_in_batch``, ``updated``, ``inserted``, ``deleted`` and
+    ``stale`` as -1."""
+
     epoch_id: int
-    mode: str = "cow"  # 'mor' merges report unknowable conflict counts as -1
+    mode: str = "cow"
     skipped: bool = False
     rows_in_batch: int = 0
     keys_in_batch: int = 0
@@ -663,11 +676,12 @@ class ParquetLakeTable:
         df = self._read_manifest_buckets(
             prev, sorted(todo), self._file_schema(prev["schema"])
         ).withColumn(BUCKET_COL, self._bucket_expr(self._layout(prev)["n_buckets"]))
-        # one task per bucket → one output file per bucket, sorted on the
-        # merge key so row groups stay range-clustered for turn scans. The
-        # sort leads with the bucket: the partitioned write sorts on it, and
-        # a sort that does not start with it would be replaced, not kept
-        df = df.repartition(len(todo), F.col(BUCKET_COL)).sortWithinPartitions(
+        # each bucket whole in one task → one output file per bucket, sorted
+        # on the merge key so row groups stay range-clustered for turn
+        # scans. The sort leads with the bucket: the partitioned write sorts
+        # on it, and a sort that does not start with it would be replaced
+        n_tasks = self._write_tasks([1] * len(todo))
+        df = df.repartition(n_tasks, F.col(BUCKET_COL)).sortWithinPartitions(
             BUCKET_COL, *self.key_cols
         )
         out = {"buckets_compacted": len(todo), "files_before": files_before}
@@ -990,6 +1004,14 @@ class ParquetLakeTable:
             return None
         return F.pmod(F.xxhash64(*keys), fanout).alias("_salt")
 
+    def _write_tasks(self, salts: list[int]) -> int:
+        """Write tasks of a rewrite of buckets salted ``salts`` ways: the
+        session's shuffle partitions, but never more than the (bucket,
+        salt) groups nor fewer than the hot buckets' salts. A group still
+        goes whole to one task, so the files written do not change."""
+        p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        return min(sum(salts), max(p, sum(s for s in salts if s > 1)))
+
     def _join_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
         """``df`` with ``_salt`` from a broadcast (bucket, fan-out) table:
         the wide-map form of ``_salt_col``."""
@@ -1093,6 +1115,7 @@ class ParquetLakeTable:
 
                 x["observe"] = [
                     rows_applied,
+                    total(F.col("_src_lsn").isNotNull(), "keys_in_batch"),
                     total(src_won & F.col("_tgt_lsn").isNotNull() & live, "updated"),
                     total(src_won & F.col("_tgt_lsn").isNull() & live, "inserted"),
                     total(
@@ -1652,8 +1675,10 @@ class ParquetLakeTable:
             }
             n_parts = []
         else:
+            # the exchange count is the session's parallelism, not one
+            # task per (bucket, salt) group (``_write_tasks``)
             salts = {b: fanout(n + manifest_rows(b)) for b, (_m, n) in probe.items()}
-            n_parts = [max(1, sum(salts.values()))]
+            n_parts = [self._write_tasks(list(salts.values()))]
 
         full = _full_schema(schema)
         by_schema: dict[str, list[str]] = {}
@@ -1790,8 +1815,8 @@ class ParquetLakeTable:
             metrics = MergeMetrics(
                 epoch_id=epoch_id,
                 mode=mode,
-                rows_in_batch=-1,  # caller may fill; avoiding an extra count job
-                keys_in_batch=-1,
+                rows_in_batch=sum(c for _m, c in probe.values()) if not mor_delta else -1,
+                keys_in_batch=int(m["keys_in_batch"] or 0) if not mor_delta else -1,
                 rows_applied=int(m["rows_applied"]),
                 updated=int(m["updated"] or 0) if not mor_delta else -1,
                 inserted=int(m["inserted"] or 0) if not mor_delta else -1,

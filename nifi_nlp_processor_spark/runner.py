@@ -180,6 +180,7 @@ class CdcEngine:
         twice. The task is wrapped where it is submitted, so its Spark job
         runs under the caller's job group and local properties."""
         if self._dlq_pool is None:
+            self._check_dlq_layout()
             self._dlq_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="dlq")
         quarantine_dir = self.quarantine_dir
 
@@ -193,6 +194,21 @@ class CdcEngine:
             return int(obs.get["n"])
 
         return self._dlq_pool.submit(inheritable_thread_target(self.lake.spark)(_write))
+
+    def _check_dlq_layout(self) -> None:
+        """Refuse a DLQ written before rejects were partitioned by epoch:
+        that layout keeps its parquet files at the root with ``_epoch_id``
+        as a column, and Spark cannot read them together with the
+        ``_epoch_id=`` partition dirs written now."""
+        legacy = glob.glob(os.path.join(self.quarantine_dir, "*.parquet"))
+        if legacy:
+            raise ValueError(
+                f"quarantine_dir {self.quarantine_dir} holds {len(legacy)} parquet "
+                "file(s) at its root, the DLQ layout from before per-epoch "
+                "partitions; upgrading it in place is unsupported: move each "
+                "file under an _epoch_id=<n>/ dir named for the epoch that "
+                "rejected its rows"
+            )
 
     def bootstrap(
         self, snapshot: DataFrame, as_of_lsn: int, epoch_id: int = -1
@@ -256,6 +272,7 @@ class CdcEngine:
         history, keyed by the ``_epoch_id`` that rejected them."""
         if self.quarantine_dir is None:
             raise ValueError("engine has no quarantine_dir")
+        self._check_dlq_layout()
         schema = self.lake.current_schema()
         if schema is not None and not glob.glob(os.path.join(self.quarantine_dir, "_epoch_id=*")):
             # no epoch has rejected a row, so no DLQ file holds a schema to

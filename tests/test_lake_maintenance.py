@@ -395,3 +395,26 @@ def test_compact_and_rebucket_write_key_sorted_files(spark, tmp_path):
     assert compacted and all(compacted.values()), compacted
     assert rebucketed and all(rebucketed.values()), rebucketed
     assert sorted(tuple(r) for r in lake.read().collect()) == before
+
+
+@pytest.mark.parametrize("lww", ["window", "agg"])
+def test_cow_merge_writes_key_sorted_files(spark, tmp_path, lww):
+    """A CoW rewrite's write tasks hold several buckets each (32 buckets,
+    8 shuffle partitions), so a task writes bucket after bucket; each file
+    it writes must still be sorted on the merge key, on both LWW paths."""
+    import random
+
+    rng = random.Random(11)
+    lake = ParquetLakeTable(spark, str(tmp_path / lww), n_buckets=32)
+    engine = CdcEngine(lake=lake, lww_strategy=lww)
+    for e in range(2):
+        rows = [
+            (f"c{i}", t, 1000 * e + 10 * i + t, f"v{e}-{i}-{t}", e)
+            for i in range(120) for t in range(2)
+        ]
+        rng.shuffle(rows)
+        engine.apply_epochs(_events(spark, rows), epoch_ids=[e])
+        written = _head_files_sorted_on_key(lake)
+        # every bucket is touched and written as one file
+        assert len(written) == len(lake.last_commit()["buckets"]) > 8, written
+        assert all(written.values()), written
