@@ -81,12 +81,16 @@ parquet "mini-lake" behind one interface (SURVEY §7 M1 fallback):
   plus the probe's batch counts in a merge that probes;
   ROWS_PER_WRITE_TASK per task, capped at MAX_WRITE_SALT) — a hot bucket
   fans out, a cold bucket stays one right-sized file instead of 8 tiny
-  ones. A copy-on-write merge (and ``compact``) sizes its exchange to the
-  session's shuffle partitions, which ``session.build_session`` sets to
-  the parallelism level: never more tasks than (touched bucket, salt)
-  groups, never fewer than the hot buckets' salts. A group never spans
-  two tasks, so the files do not depend on the task count; a task that
-  holds several buckets writes them one after another, one file each.
+  ones. A copy-on-write merge with no hot bucket (and ``compact``) caps
+  its exchange at the session's shuffle partitions, which
+  ``session.build_session`` sets to the parallelism level: a task holds
+  several cold buckets and writes them one after another, one file each.
+  A merge with a hot bucket keeps one partition per (touched bucket,
+  salt) group — the exchange hashes (bucket, salt), so fewer partitions
+  would crowd a hot bucket's salts into fewer tasks beside the cold
+  buckets. A group never spans two tasks, but the hash can still put two
+  salts of one bucket in one task (one file); the window sorts on the key
+  before the salt, so that file is key-sorted too.
   A merge-on-read delta write runs no probe, so only
   buckets the manifest already sizes past one task get a salt, and its
   exchange carries no partition count: AQE coalesces it to the epoch's
@@ -1005,12 +1009,12 @@ class ParquetLakeTable:
         return F.pmod(F.xxhash64(*keys), fanout).alias("_salt")
 
     def _write_tasks(self, salts: list[int]) -> int:
-        """Write tasks of a rewrite of buckets salted ``salts`` ways: the
-        session's shuffle partitions, but never more than the (bucket,
-        salt) groups nor fewer than the hot buckets' salts. A group still
-        goes whole to one task, so the files written do not change."""
-        p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return min(sum(salts), max(p, sum(s for s in salts if s > 1)))
+        """Write tasks of a rewrite of buckets salted ``salts`` ways: one
+        per (bucket, salt) group when a bucket is hot, else the cold
+        buckets capped at the session's shuffle partitions."""
+        if any(s > 1 for s in salts):
+            return sum(salts)
+        return max(1, min(len(salts), int(self.spark.conf.get("spark.sql.shuffle.partitions"))))
 
     def _join_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
         """``df`` with ``_salt`` from a broadcast (bucket, fan-out) table:
@@ -1076,7 +1080,10 @@ class ParquetLakeTable:
             }
             x: dict = {"layout": [F.col(BUCKET_COL), F.col("_salt")]}
             if lww == "window":
-                w = Window.partitionBy(BUCKET_COL, "_salt", *self.key_cols).orderBy(
+                # key before salt: the sort this window adds then orders a
+                # task's rows (bucket, key), and a file stays key-sorted
+                # when two salts of one bucket hash into the same task
+                w = Window.partitionBy(BUCKET_COL, *self.key_cols, "_salt").orderBy(
                     F.desc(order)
                 )
                 wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1675,8 +1682,6 @@ class ParquetLakeTable:
             }
             n_parts = []
         else:
-            # the exchange count is the session's parallelism, not one
-            # task per (bucket, salt) group (``_write_tasks``)
             salts = {b: fanout(n + manifest_rows(b)) for b, (_m, n) in probe.items()}
             n_parts = [self._write_tasks(list(salts.values()))]
 
@@ -1724,7 +1729,7 @@ class ParquetLakeTable:
             # One shuffle, straight into the write layout: hash partitioning
             # on (bucket, salt) clusters every key (both are functions of
             # the key columns), which satisfies the window's required
-            # distribution over (bucket, salt, *key) — Spark adds only the
+            # distribution over (bucket, *key, salt) — Spark adds only the
             # in-partition sort, no second exchange, and the parquet write
             # below inherits the layout unchanged. row_number()==1 over the
             # LWW order descending is argmax(order), i.e. exactly the

@@ -4,10 +4,11 @@
         --workload bulk_replay --seeds 1-6 --out DIR
     python3 scripts/bench_pairs.py report DIR
 
-``run`` runs ``perfbench/run.py --workload W --seed S --seconds 20
---trace 0`` once per seed in each checkout (each in its own directory, so
-each builds from its own source), alternating the order: odd seeds run A
-first, even seeds B first. Each run's standard output is kept as
+``run`` runs ``perfbench/run.py --workload W --seed S --seconds N
+--trace 0`` (N is ``BENCHMARK.json``'s ``run_seconds``) once per seed in
+each checkout (each in its own directory, so each builds from its own
+source), alternating the order: odd seeds run A first, even seeds B
+first. Each run's standard output is kept as
 ``DIR/<workload>.s<seed>.<a|b>.txt``, and the report follows.
 
 ``report`` pairs the runs by seed and prints, for every end-to-end metric
@@ -124,7 +125,7 @@ def cmd_run(args) -> int:
         for side in ("a", "b") if s % 2 else ("b", "a"):
             p = subprocess.run(
                 [*spec["command"], "--workload", args.workload, "--seed", str(s),
-                 "--seconds", str(args.seconds), "--trace", "0"],
+                 "--seconds", str(spec["run_seconds"]), "--trace", "0"],
                 cwd=sides[side], capture_output=True, text=True,
             )
             with open(os.path.join(args.out, f"{args.workload}.s{s}.{side}.txt"), "w") as fh:
@@ -154,7 +155,6 @@ def main() -> int:
     r.add_argument("--b", required=True, help="checkout B (the change)")
     r.add_argument("--workload", required=True)
     r.add_argument("--seeds", required=True, help="e.g. 1-6 or 1,4,7")
-    r.add_argument("--seconds", type=int, default=load_spec()["run_seconds"])
     r.add_argument("--out", required=True)
     p = sub.add_parser("report")
     p.add_argument("dir")

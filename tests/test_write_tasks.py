@@ -1,14 +1,18 @@
-"""The write stage of a copy-on-write bucket rewrite is sized to the
-session's shuffle partitions, not one task per touched (bucket, salt).
+"""The write stage of a copy-on-write bucket rewrite with no hot bucket
+is sized to the session's shuffle partitions, not one task per touched
+bucket; a rewrite with a hot bucket keeps one task per (bucket, salt).
 
 Pinned here, in the test session (``shuffle_partitions=8``) on a
 32-bucket table:
 
-* the frame a CoW merge hands its commit writer partitions into at most 8
-  tasks — with one exchange on the window path — and so does
-  ``compact``'s;
-* the layout does not depend on the task count: every bucket is still
-  exactly one file, and the state equals the sequential oracle's.
+* the frame a CoW merge of cold buckets hands its commit writer
+  partitions into at most 8 tasks — with one exchange on the window path —
+  and so does ``compact``'s;
+* every cold bucket is still exactly one file, and the state equals the
+  sequential oracle's;
+* with a hot bucket among the touched buckets, the exchange has one
+  partition per (bucket, salt) group, the hot bucket fans out and every
+  file is sorted on the merge key.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ import re
 
 import pytest
 
+import nifi_nlp_processor_spark.lake as lake_mod
 from nifi_nlp_processor_spark.lake import ParquetLakeTable
 from nifi_nlp_processor_spark.oracle import final_rows
 
@@ -33,6 +38,17 @@ def _epoch(e):
         {"conv_id": f"c{i}", "turn_idx": t, "role": "user", "text": f"v{e}-{i}-{t}",
          "tool": None, "ts": _TS, "lsn": 1000 * e + 10 * i + t, "op": "U" if e else "I"}
         for i in range(120) for t in range(2)
+    ]
+
+
+def _hot_epoch(e):
+    """``_epoch(e)`` plus 320 turns of one hot conversation. Its id is
+    chosen so that its bucket's 8 salts hash into only 6 of the merge's 38
+    partitions."""
+    return _epoch(e) + [
+        {"conv_id": "hot0", "turn_idx": t, "role": "user", "text": f"h{e}-{t}",
+         "tool": None, "ts": _TS, "lsn": 100_000 * (e + 1) + t, "op": "U" if e else "I"}
+        for t in range(320)
     ]
 
 
@@ -90,3 +106,48 @@ def test_cow_rewrite_write_tasks_capped_at_shuffle_partitions(spark, monkeypatch
     assert plan_c.count("Exchange") == 1 and int(counts_c[0]) <= 8, plan_c
     assert set(_bucket_files(lake).values()) == {1}
     assert sorted(tuple(r) for r in lake.read().select(*COLS).collect()) == want
+
+
+@pytest.mark.parametrize("lww", ["window", "agg"])
+def test_hot_bucket_rewrite_keeps_one_task_per_salt(spark, monkeypatch, tmp_path, lww):
+    """A hot bucket among far more touched buckets than shuffle partitions:
+    the exchange keeps one partition per (bucket, salt) group, since it
+    hashes (bucket, salt) and fewer partitions would crowd the hot
+    bucket's salts onto fewer tasks beside the cold buckets. The hash can
+    still put two of its salts in one task, which then writes one file for
+    both; this fixture has such a pair, and that file must be key-sorted
+    like every other."""
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(lake_mod, "ROWS_PER_WRITE_TASK", 40)
+    monkeypatch.setattr(lake_mod, "MAX_WRITE_SALT", 8)
+    lake = ParquetLakeTable(spark, str(tmp_path / lww), n_buckets=N_BUCKETS)
+    lake.merge_into(spark.createDataFrame(_hot_epoch(0), SCHEMA), 0, lww=lww)
+    frames = _spy_commit(monkeypatch)
+    m = lake.merge_into(spark.createDataFrame(_hot_epoch(1), SCHEMA), 1, lww=lww)
+
+    rows = {int(b): p["rows"] for b, p in lake.last_commit()["buckets"].items()}
+    hot_b = max(rows, key=rows.get)
+    assert rows[hot_b] >= 320 and m.buckets_touched == len(rows) > 8
+    # 640 rows of the hot bucket at 40 per task: salt 8 (capped); cold: 1
+    n_groups = len(rows) - 1 + 8
+    assert n_groups == 38
+    plan, counts = _exchanges(frames[0])
+    assert str(n_groups) in counts, plan
+    if lww == "window":
+        assert plan.count("Exchange") == 1, plan
+
+    files = _bucket_files(lake)
+    assert all(n == 1 for b, n in files.items() if b != hot_b), files
+    assert files[hot_b] == 6, files  # 8 salts in 6 files: some share one
+    ptr = lake.last_commit()["buckets"][str(hot_b)]
+    d = os.path.join(lake.root, ptr["path"])
+    for f in sorted(os.listdir(d)):
+        if f.endswith(".parquet"):
+            t = pq.read_table(os.path.join(d, f), columns=lake.key_cols).to_pylist()
+            keys = [(r["conv_id"], r["turn_idx"]) for r in t]
+            assert keys == sorted(keys), f
+
+    want = final_rows(_hot_epoch(0) + _hot_epoch(1), COLS)
+    raw = lake.read_raw().where("not _deleted").select(*COLS)
+    assert sorted(tuple(r) for r in raw.collect()) == want
