@@ -1014,7 +1014,7 @@ class ParquetLakeTable:
         buckets capped at the session's shuffle partitions."""
         if any(s > 1 for s in salts):
             return sum(salts)
-        return max(1, min(len(salts), int(self.spark.conf.get("spark.sql.shuffle.partitions"))))
+        return min(len(salts), int(self.spark.conf.get("spark.sql.shuffle.partitions")))
 
     def _join_salt(self, df: DataFrame, salts: dict[int, int]) -> DataFrame:
         """``df`` with ``_salt`` from a broadcast (bucket, fan-out) table:
